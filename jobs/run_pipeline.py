@@ -4,7 +4,7 @@ Usage (cluster):
     spark-submit --py-files otel_arrow_spark.zip jobs/run_pipeline.py \
         --input  s3://bucket/transcripts \
         --output s3://bucket/out \
-        [--resume] [--engine pandas|native] [--no-salt]
+        [--resume]
 
 Usage (sandbox):
     python jobs/run_pipeline.py --input .cache/transcripts/n2000000 --output /tmp/out
@@ -33,9 +33,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input", default=None, help="transcript table path")
     ap.add_argument("--output", default=None, help="output directory (sinks + manifest)")
     ap.add_argument("--resume", action="store_true", help="skip committed steps")
-    ap.add_argument("--engine", default=None, choices=["pandas", "native"])
-    ap.add_argument("--salted", action="store_true",
-                    help="two-phase salted aggregation (non-algebraic aggs only)")
     ap.add_argument("--master", default=None, help="override master (default: spark-submit's)")
     args = ap.parse_args(argv)
     if not args.config and not (args.input and args.output):
@@ -59,21 +56,12 @@ def main(argv: list[str] | None = None) -> int:
             overrides["input_path"] = args.input
         if args.output:
             overrides["output_dir"] = args.output
-        if args.engine:
-            overrides["parse_engine"] = args.engine
-        if args.salted:
-            overrides["salted"] = True
         manifest = run_from_spec(spark, args.config, resume=args.resume,
                                  overrides=overrides)
     else:
         manifest = run_pipeline(
             spark,
-            PipelineConfig(
-                input_path=args.input,
-                output_dir=args.output,
-                parse_engine=args.engine or "pandas",
-                salted=args.salted,
-            ),
+            PipelineConfig(input_path=args.input, output_dir=args.output),
             resume=args.resume,
         ).manifest
     print(json.dumps(manifest, indent=2, sort_keys=True, default=str))

@@ -202,8 +202,8 @@ def salted_aggregate(
     For algebraic aggregates (count/sum/min/max/avg) Spark's hash aggregate
     already runs a partial phase before the shuffle — a hot key leaves each
     map task as a single partial row — so explicit salting just adds a
-    second shuffle (measured ~2x agg cost at 2M rows). The pipeline
-    default is therefore salted=False.
+    second shuffle (measured ~2x agg cost at 2M rows), which is why the
+    pipeline always uses :func:`sink_aggregate`.
     """
     salt = F.pmod(F.coalesce(F.col("turn_idx"), F.lit(0)), F.lit(n_salts)).alias("_salt")
     partial = df.groupBy(*keys, salt).agg(

@@ -23,11 +23,10 @@ Spark realization:
 * delta histogram → count/sum/min/max algebraic aggregates + an
   element-wise fold of bucket-count arrays (``aggregate ∘ collect_list``
   with ``zip_with`` addition) — one shuffle, JVM-side;
-* delta exp-histogram → ``applyInPandas`` per (window, stream) group:
-  scale alignment is index arithmetic (bucket i at scale s covers buckets
-  ``(offset+i) >> (s - target)`` at the coarser target scale), vectorized
-  in numpy — the sanctioned custom-operator route for semantics Spark
-  expressions can't express cleanly.
+* delta exp-histogram → scale alignment as index arithmetic (bucket i at
+  scale s covers bucket ``(offset+i) >> (s - target)`` at the coarser
+  target scale): ``posexplode`` + ``shiftright`` + partial/final hash
+  aggregates, JVM-side.
 """
 
 from __future__ import annotations
@@ -230,38 +229,11 @@ def points_to_histogram(
     )
 
 
-def _exp_bucket_side_merge(offsets, shifts, lists):
-    """Scatter-add one bucket side (positive or negative) of a whole group
-    at once: every bucket of every point maps to ``(offset + i) >> shift``
-    at the target scale. Fully vectorized — ragged per-point count lists
-    concatenate into one array, per-element source indices derive from
-    repeated offsets/shifts, and one ``np.add.at`` lands the merge."""
-    import numpy as np
-
-    lens = np.fromiter((len(c) for c in lists), dtype=np.int64, count=len(lists))
-    total = int(lens.sum())
-    if total == 0:
-        return 0, np.zeros(0, dtype=np.int64)
-    counts = np.concatenate(
-        [np.asarray(c, dtype=np.int64) for c in lists if len(c)]
-    )
-    starts = np.repeat(np.asarray(offsets, dtype=np.int64), lens)
-    within = np.arange(total, dtype=np.int64) - np.repeat(
-        np.cumsum(lens) - lens, lens
-    )
-    idx = (starts + within) >> np.repeat(np.asarray(shifts, dtype=np.int64), lens)
-    lo = int(idx.min())
-    out = np.zeros(int(idx.max()) - lo + 1, dtype=np.int64)
-    np.add.at(out, idx - lo, counts)
-    return lo, out
-
-
 def exp_histogram_delta_merge(
     df: DataFrame,
     period: str = "60 seconds",
     keys: tuple[str, ...] = ("metric_name",),
     ts_col: str = "ts",
-    engine: str = "native",
 ) -> DataFrame:
     """Delta exponential-histogram reaggregation with scale alignment,
     positive AND negative bucket sides (builder.rs:79-128 merges all
@@ -273,105 +245,28 @@ def exp_histogram_delta_merge(
     s maps to index ``(o + i) >> (s - target)`` at the coarser target
     scale (OTel data model, exponential histograms).
 
-    Two engines, semantically identical (parity-tested):
-
-    * ``native`` (default) — pure JVM expressions: one hash aggregate
-      computes the scalar sums + target scale per group, points join back
-      to pick up the shift, ``posexplode`` + ``shiftright`` land every
-      bucket at its target index, and two more hash aggregates rebuild the
-      dense count arrays (``sequence`` over a ``map_from_entries`` lookup).
-      Every step is partial+final and whole-stage-codegen'd — the group
-      count can be millions without per-group Python overhead (the
-      pandas engine at sf0.1's ~40k groups took 103s; native takes ~1s).
-    * ``pandas`` — ``applyInPandas`` per (window, stream) group, vectorized
-      numpy scatter-add inside the group. Kept as the readable oracle and
-      for parity testing; right only when groups are few and fat.
+    Pure JVM expressions, whole-stage codegen'd, every aggregate
+    partial+final — the group count can be millions without per-group
+    Python overhead (a per-group ``applyInPandas`` merge took 103 s at
+    sf0.1's ~40k groups; this takes ~1 s). Plan shape: groupBy #1
+    (scalars + target scale) → points⋈scalars equi-join on the group key
+    for the shift → ``posexplode`` + ``shiftright`` land every bucket at
+    its target index → groupBy #2 on (group, target idx) → groupBy #3
+    assembles the dense array with
+    ``transform(sequence(lo, hi), try_element_at(map, ·))``. Per-group
+    bucket spans are bounded (OTel exp histograms are ≤320 buckets/side),
+    so the sequence/map steps are O(span) JVM work.
 
     ``neg_offset``/``neg_counts`` columns are optional; inputs without
     them merge the positive side only and emit empty negatives.
     """
-    if engine == "native":
-        return _exp_merge_native(df, period, keys, ts_col)
-    import numpy as np
-    import pandas as pd
-
-    has_neg = "neg_counts" in df.columns
-
-    out_fields = ", ".join(
-        [
-            "window_start timestamp_ntz",
-            "window_end timestamp_ntz",
-            *[f"{k} string" for k in keys],
-            "e_count bigint",
-            "e_sum double",
-            "scale int",
-            "zero_count bigint",
-            "pos_offset int",
-            "pos_counts array<bigint>",
-            "neg_offset int",
-            "neg_counts array<bigint>",
-        ]
-    )
-
-    w = F.window(F.col(ts_col), period)
-    keyed = df.withColumn("_w", w).withColumn("window_start", F.col("_w.start")).withColumn(
-        "window_end", F.col("_w.end")
-    ).drop("_w")
-
-    group_cols = ["window_start", "window_end", *keys]
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        scales = pdf["scale"].to_numpy(dtype=np.int64)
-        target = int(scales.min())
-        shifts = scales - target
-        pos_lo, pos = _exp_bucket_side_merge(
-            pdf["pos_offset"].to_numpy(dtype=np.int64), shifts, pdf["pos_counts"].tolist()
-        )
-        if has_neg:
-            neg_lo, neg = _exp_bucket_side_merge(
-                pdf["neg_offset"].to_numpy(dtype=np.int64), shifts, pdf["neg_counts"].tolist()
-            )
-        else:
-            neg_lo, neg = 0, np.zeros(0, dtype=np.int64)
-        row = {
-            "window_start": pdf["window_start"].iloc[0],
-            "window_end": pdf["window_end"].iloc[0],
-            **{k: pdf[k].iloc[0] for k in keys},
-            "e_count": pdf["e_count"].sum(),
-            "e_sum": pdf["e_sum"].sum(),
-            "scale": target,
-            "zero_count": pdf["zero_count"].sum(),
-            "pos_offset": pos_lo,
-            "pos_counts": pos.tolist(),
-            "neg_offset": neg_lo,
-            "neg_counts": neg.tolist(),
-        }
-        return pd.DataFrame([row])
-
-    return keyed.groupBy(*group_cols).applyInPandas(merge, schema=out_fields)
-
-
-def _exp_merge_native(
-    df: DataFrame,
-    period: str,
-    keys: tuple[str, ...],
-    ts_col: str,
-) -> DataFrame:
-    """Expression-only exp-histogram merge (see exp_histogram_delta_merge).
-
-    Plan shape: groupBy #1 (scalars + target scale, partial+final) →
-    points⋈scalars equi-join on the group key → posexplode buckets →
-    groupBy #2 on (group, target idx) → groupBy #3 assembles the dense
-    array with ``transform(sequence(lo, hi), try_element_at(map, ·))``.
-    Per-group bucket spans are bounded (OTel exp histograms are ≤320
-    buckets/side), so the sequence/map steps are O(span) JVM work."""
     has_neg = "neg_counts" in df.columns
 
     w = F.window(F.col(ts_col), period)
     # The whole group key travels as ONE struct: struct equality treats
     # null fields as equal, so the points⋈scalars equi-joins below are
-    # null-safe (a NULL key column keeps its group, matching the pandas
-    # engine's groupBy) while Catalyst still extracts a hash-joinable key.
+    # null-safe (a NULL key column keeps its group, as a plain groupBy
+    # does) while Catalyst still extracts a hash-joinable key.
     keyed = df.withColumn("_w", w).withColumn(
         "_gkey", F.struct(F.col("_w"), *[F.col(k) for k in keys])
     )

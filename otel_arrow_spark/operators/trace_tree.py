@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from otel_arrow_spark.session import small_state_conf
+
 
 def _doubling_ptrs(spans: DataFrame, max_iter: int, with_sum: bool
                    ) -> tuple[DataFrame, DataFrame]:
@@ -452,18 +454,8 @@ def pagerank(
     # ranks), restoring the session conf afterwards. The EDGE DERIVATION
     # (raw-span joins) above ran under the full session config — only the
     # node-sized state is affected.
-    spark = edges.sparkSession
-    saved = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
+    with small_state_conf(edges.sparkSession):
         return _pagerank_loop(edges, src, dst, weight, iterations, damping)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def _pagerank_loop(

@@ -16,12 +16,8 @@ Spec shape (YAML or JSON; JSON is a YAML subset so one loader serves both)::
     kind: telemetry_pipeline        # or: corpus_clean
     source:
       path: /data/transcripts       # parquet directory / table path
-    parse:
-      engine: pandas                # pandas (Arrow-vectorized, default) | native
     aggregate:
       keys: [conv_id, tool, severity_text]
-      salted: false                 # two-phase salted agg (non-algebraic only)
-      n_salts: 16
     sink:
       output_dir: /data/out
 
@@ -215,26 +211,17 @@ def spec_to_config(spec: dict) -> PipelineConfig | CorpusConfig | TransformConfi
         raise SpecError(f"'kind' must be one of {_KINDS}, got {kind!r}")
 
     if kind == "telemetry_pipeline":
-        _check_sections(spec, {"kind", "source", "parse", "aggregate", "sink"})
+        _check_sections(spec, {"kind", "source", "aggregate", "sink"})
         source = _section(spec, "source", {"path": str}, required=("path",))
-        parse = _section(spec, "parse", {"engine": str})
-        agg = _section(
-            spec, "aggregate", {"keys": list, "salted": bool, "n_salts": int}
-        )
+        agg = _section(spec, "aggregate", {"keys": list})
         sink = _section(spec, "sink", {"output_dir": str}, required=("output_dir",))
-        engine = parse.get("engine", "pandas")
-        if engine not in ("pandas", "native"):
-            raise SpecError(f"parse.engine must be pandas|native, got {engine!r}")
         keys = agg.get("keys", ["conv_id", "tool", "severity_text"])
         if not all(isinstance(k, str) for k in keys):
             raise SpecError("aggregate.keys must be a list of column names")
         return PipelineConfig(
             input_path=source["path"],
             output_dir=sink["output_dir"],
-            parse_engine=engine,
             agg_keys=tuple(keys),
-            salted=agg.get("salted", False),
-            n_salts=agg.get("n_salts", 16),
         )
 
     if kind == "transform":

@@ -19,7 +19,8 @@ Scale notes (the part that must survive 100 TB):
 * the routed-rows sink is a single-pass ``partitionBy(signal_class)``
   write — one job, one scan, no per-sink rescan;
 * aggregates run off the persisted routed frame and shuffle once on the
-  group keys; the salted variant handles hot conversations;
+  group keys — Spark's partial (map-side) + final hash aggregate already
+  reduces a hot conversation to one partial row per map task;
 * everything downstream of the scan is column-pruned automatically: the
   sink projection lists columns explicitly.
 """
@@ -34,7 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from otel_arrow_spark.operators.aggregate import salted_aggregate, sink_aggregate
+from otel_arrow_spark.operators.aggregate import sink_aggregate
 from otel_arrow_spark.operators.enrich import enrich
 from otel_arrow_spark.operators.parse import parse_transcripts
 from otel_arrow_spark.operators.route import SIGNAL_CLASSES, with_signal_class
@@ -70,21 +71,7 @@ SINK_COLUMNS = [
 class PipelineConfig:
     input_path: str
     output_dir: str
-    # pandas is the measured-fastest engine at scale: the Arrow eval node is
-    # a materialization barrier, so each regex runs once per row, while the
-    # native expression path gets re-inlined per downstream reference by
-    # CollapseProject (measured 4x slower at 2M rows). It is also the
-    # architecture the north star mandates (vectorized pandas/Arrow UDFs).
-    parse_engine: str = "pandas"
     agg_keys: tuple[str, ...] = ("conv_id", "tool", "severity_text")
-    # Spark's hash aggregate already runs partial (map-side) + final phases,
-    # which for algebraic aggregates (count/min/max) is exactly the salted
-    # two-phase decomposition: a hot conversation reduces to one partial row
-    # per map task before the shuffle. Explicit salting (salted=True) adds a
-    # second shuffle and only pays off for non-algebraic aggregates
-    # (collect_list, exact percentiles) — see salted_aggregate's docstring.
-    salted: bool = False
-    n_salts: int = 16
     repartition: int | None = None  # test hook for batching-invariance checks
 
 
@@ -105,7 +92,7 @@ def build_routed(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     df = spark.read.parquet(cfg.input_path)
     if cfg.repartition is not None:
         df = df.repartition(cfg.repartition)
-    parsed = parse_transcripts(df, engine=cfg.parse_engine)
+    parsed = parse_transcripts(df)
     enriched = enrich(parsed, spark)
     return with_signal_class(enriched).select(*SINK_COLUMNS)
 
@@ -137,7 +124,7 @@ def run_pipeline(
     """
     os.makedirs(cfg.output_dir, exist_ok=True)
     manifest_path = os.path.join(cfg.output_dir, "MANIFEST.json")
-    manifest: dict = {"config": {"input": cfg.input_path, "engine": cfg.parse_engine}}
+    manifest: dict = {"config": {"input": cfg.input_path}}
     if resume and os.path.exists(manifest_path):
         with open(manifest_path) as f:
             manifest = json.load(f)
@@ -184,12 +171,7 @@ def run_pipeline(
     if not (resume and _committed(agg_root)):
         t0 = time.monotonic()
         routed_df = spark.read.parquet(routed_path)
-        keys = ("signal_class", *cfg.agg_keys)
-        agg = (
-            salted_aggregate(routed_df, keys, cfg.n_salts)
-            if cfg.salted
-            else sink_aggregate(routed_df, keys)
-        )
+        agg = sink_aggregate(routed_df, ("signal_class", *cfg.agg_keys))
         agg.write.mode("overwrite").partitionBy("signal_class").parquet(agg_root)
         manifest["timings_sec"]["agg_write"] = round(time.monotonic() - t0, 3)
         _commit(agg_root)

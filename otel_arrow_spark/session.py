@@ -11,6 +11,8 @@ for dictionary-sized lookups.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -74,3 +76,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Conf for loops over metadata- or node-sized state (a service graph, a
+# near-dup edge list, a bloom/zonemap manifest): under the session's
+# data-scale shuffle config their tiny joins/aggregates are pure scheduler
+# overhead, so they run single-partition with AQE's per-stage re-planning
+# off. Callers must only use it where results are partitioning-invariant.
+_SMALL_STATE_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+
+
+@contextmanager
+def small_state_conf(spark: SparkSession) -> Iterator[None]:
+    """Run the body under ``_SMALL_STATE_CONF``; the session's own values
+    are restored on exit, also when the body raises. Anything lazy built
+    inside must be materialized (collected or checkpointed) inside, or it
+    would execute later under the restored conf."""
+    saved = {k: spark.conf.get(k) for k in _SMALL_STATE_CONF}
+    try:
+        for k, v in _SMALL_STATE_CONF.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

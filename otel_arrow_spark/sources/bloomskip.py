@@ -34,10 +34,13 @@ Scale design:
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from otel_arrow_spark.session import small_state_conf
 
 BLOOM_DIR = "_bloomskip"
 
@@ -202,25 +205,10 @@ def bloom_pruned_scan(
     # (measured ~1 s of a 2 s query); run it single-partition with AQE
     # off when the manifest is metadata-sized, like the pagerank/CC
     # loops (integer counts — partitioning-invariant by construction)
-    saved = None
-    if head.n_rows <= 1_000_000:
-        saved = {
-            kk: spark.conf.get(kk)
-            for kk in (
-                "spark.sql.adaptive.enabled",
-                "spark.sql.shuffle.partitions",
-            )
-        }
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
+    small = head.n_rows <= 1_000_000
+    with small_state_conf(spark) if small else nullcontext():
         files = [r.file for r in keep.collect()]
-        total = head.n_files
-    finally:
-        if saved is not None:
-            for kk, v in saved.items():
-                spark.conf.set(kk, v)
-    stats = {"files_total": total, "files_read": len(files)}
+    stats = {"files_total": head.n_files, "files_read": len(files)}
     if not files:
         schema = spark.read.parquet(path).schema
         return spark.createDataFrame([], schema).filter(

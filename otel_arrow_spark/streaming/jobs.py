@@ -44,9 +44,9 @@ def stream_transcripts_source(
     return reader.parquet(input_dir)
 
 
-def build_stream_routed(spark: SparkSession, stream: DataFrame, parse_engine: str = "pandas") -> DataFrame:
+def build_stream_routed(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """parse → enrich → route on a streaming frame (operators unchanged)."""
-    return with_signal_class(enrich(parse_transcripts(stream, engine=parse_engine), spark))
+    return with_signal_class(enrich(parse_transcripts(stream), spark))
 
 
 def stream_pipeline(
@@ -55,7 +55,6 @@ def stream_pipeline(
     output_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    parse_engine: str = "pandas",
 ) -> StreamingQuery:
     """Streaming fan-out: routed rows appended per micro-batch to
     ``{output_dir}/routed`` partitioned by signal_class.
@@ -66,8 +65,7 @@ def stream_pipeline(
     the WAL: killing and restarting the query never re-writes a committed
     micro-batch (exactly-once file sink).
     """
-    routed = build_stream_routed(spark, stream_transcripts_source(spark, input_dir),
-                                 parse_engine=parse_engine)
+    routed = build_stream_routed(spark, stream_transcripts_source(spark, input_dir))
     writer = (
         routed.writeStream.format("parquet")
         .option("path", f"{output_dir}/routed")
@@ -125,7 +123,6 @@ def stream_logs_star_encode(
     output_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    parse_engine: str = "pandas",
 ) -> StreamingQuery:
     """Streaming LOGS-star encoder: each micro-batch of raw transcripts
     parses, enriches, and normalizes into the four star tables
@@ -154,7 +151,7 @@ def stream_logs_star_encode(
     stream = stream_transcripts_source(spark, input_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        flat = _enrich(_parse(batch_df, engine=parse_engine), spark).localCheckpoint()
+        flat = _enrich(_parse(batch_df), spark).localCheckpoint()
         for name, frame in encode_logs_star(flat).items():
             (
                 frame.withColumn("batch_id", F.lit(batch_id).cast("long"))

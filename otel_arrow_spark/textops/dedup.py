@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from otel_arrow_spark.session import small_state_conf
+
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition ONLY when the input's scan parallelism is below core count.
@@ -211,7 +213,8 @@ def minhash_signature_fast(shingle_hashes: Column, n_hashes: int = 64, seed: int
     row inside an Arrow-batched pandas UDF. Higher-order Spark expressions
     don't participate in whole-stage codegen (interpreted eval), so the
     pure-expression form (minhash_signature) costs ~3-10x this at 64
-    hashes — the same barrier/vectorization trade as the parse engines.
+    hashes — the same Arrow-barrier/vectorization trade as the parse UDF
+    (operators/parse.py).
     """
     import numpy as np
     import pandas as pd
@@ -861,22 +864,9 @@ def connected_components(
     # partitioning-invariant by construction). Large graphs keep the
     # session config. Conf is restored afterwards; the loop's outputs
     # are checkpointed inside it, so nothing lazy escapes the override.
-    spark = edges.sparkSession
     if edges.count() <= 1_000_000:
-        saved = {
-            k: spark.conf.get(k)
-            for k in (
-                "spark.sql.adaptive.enabled",
-                "spark.sql.shuffle.partitions",
-            )
-        }
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        try:
+        with small_state_conf(edges.sparkSession):
             return _cc_loop(edges, max_iter)
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
     return _cc_loop(edges, max_iter)
 
 

@@ -48,7 +48,6 @@ class TestTelemetrySpec:
         spec_file.write_text(
             "kind: telemetry_pipeline\n"
             f"source: {{path: {tiny_transcripts}}}\n"
-            "parse: {engine: pandas}\n"
             "aggregate:\n  keys: [conv_id, tool, severity_text]\n"
             f"sink: {{output_dir: {spec_out}}}\n"
         )
@@ -223,7 +222,7 @@ class TestSpecValidation:
 
     def test_unknown_section_key_rejected(self):
         with pytest.raises(SpecError, match="unknown key"):
-            spec_to_config({**self.BASE, "parse": {"engin": "pandas"}})
+            spec_to_config({**self.BASE, "aggregate": {"keyz": ["conv_id"]}})
 
     def test_bad_kind_rejected(self):
         with pytest.raises(SpecError, match="'kind' must be"):
@@ -238,9 +237,16 @@ class TestSpecValidation:
         with pytest.raises(SpecError, match="must be"):
             spec_to_config({**self.BASE, "aggregate": {"keys": "conv_id"}})
 
-    def test_bad_engine_rejected(self):
-        with pytest.raises(SpecError, match="pandas|native"):
-            spec_to_config({**self.BASE, "parse": {"engine": "turbo"}})
+    def test_removed_engine_and_salt_keys_rejected(self):
+        """The parse section and the salting keys are gone: a spec that
+        still sets them fails loudly instead of being ignored."""
+        for section, body in (
+            ("parse", {"engine": "pandas"}),
+            ("aggregate", {"salted": True}),
+            ("aggregate", {"n_salts": 8}),
+        ):
+            with pytest.raises(SpecError, match="unknown"):
+                spec_to_config({**self.BASE, section: body})
 
     def test_non_mapping_root_rejected(self, tmp_path):
         f = tmp_path / "bad.yaml"

@@ -185,12 +185,91 @@ class TestDeltaHistogram:
         assert got == [(1, 0, 0), (1, 0, 0), (0, 1, 0), (0, 1, 0), (0, 0, 1)]
 
 
-ENGINES = ["native", "pandas"]
+def _exp_bucket_side_merge(offsets, shifts, lists):
+    """Scatter-add one bucket side (positive or negative) of a whole group
+    at once: every bucket of every point maps to ``(offset + i) >> shift``
+    at the target scale. Ragged per-point count lists concatenate into one
+    array, per-element source indices derive from repeated offsets/shifts,
+    and one ``np.add.at`` lands the merge."""
+    import numpy as np
+
+    lens = np.fromiter((len(c) for c in lists), dtype=np.int64, count=len(lists))
+    total = int(lens.sum())
+    if total == 0:
+        return 0, np.zeros(0, dtype=np.int64)
+    counts = np.concatenate(
+        [np.asarray(c, dtype=np.int64) for c in lists if len(c)]
+    )
+    starts = np.repeat(np.asarray(offsets, dtype=np.int64), lens)
+    within = np.arange(total, dtype=np.int64) - np.repeat(
+        np.cumsum(lens) - lens, lens
+    )
+    idx = (starts + within) >> np.repeat(np.asarray(shifts, dtype=np.int64), lens)
+    lo = int(idx.min())
+    out = np.zeros(int(idx.max()) - lo + 1, dtype=np.int64)
+    np.add.at(out, idx - lo, counts)
+    return lo, out
+
+
+def exp_merge_oracle(df, period="60 seconds", keys=("metric_name",)):
+    """Driver-side numpy oracle for exp_histogram_delta_merge:
+    ``expected = df.toPandas().groupby(window, *keys).apply(merge)``.
+    Windows are epoch-aligned tumbling periods, as ``F.window`` makes them
+    (the test session's time zone is UTC)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import Row
+
+    pdf = df.toPandas()
+    has_neg = "neg_counts" in pdf.columns
+    width = pd.Timedelta(period)
+    pdf["window_start"] = pdf["ts"].dt.floor(width)
+
+    def merge(g):
+        scales = g["scale"].to_numpy(dtype=np.int64)
+        target = int(scales.min())
+        shifts = scales - target
+        pos_lo, pos = _exp_bucket_side_merge(
+            g["pos_offset"].to_numpy(dtype=np.int64), shifts, g["pos_counts"].tolist()
+        )
+        neg_lo, neg = 0, np.zeros(0, dtype=np.int64)
+        if has_neg:
+            neg_lo, neg = _exp_bucket_side_merge(
+                g["neg_offset"].to_numpy(dtype=np.int64), shifts, g["neg_counts"].tolist()
+            )
+        start = g["window_start"].iloc[0]
+        return Row(
+            window_start=start.to_pydatetime(),
+            window_end=(start + width).to_pydatetime(),
+            **{k: (None if pd.isna(g[k].iloc[0]) else g[k].iloc[0]) for k in keys},
+            e_count=int(g["e_count"].sum()),
+            e_sum=float(g["e_sum"].sum()),
+            scale=target,
+            zero_count=int(g["zero_count"].sum()),
+            pos_offset=pos_lo,
+            pos_counts=pos.tolist(),
+            neg_offset=neg_lo,
+            neg_counts=neg.tolist(),
+        )
+
+    return [merge(g) for _, g in pdf.groupby(["window_start", *keys], dropna=False)]
+
+
+def exp_merge(df, impl, period="60 seconds", keys=("metric_name",)):
+    """Run one implementation of the merge: ``native`` is the production
+    operator, ``pandas`` the driver-side oracle. Hand-computed cases check
+    both, so the oracle the randomized test trusts is itself pinned."""
+    if impl == "native":
+        return exp_histogram_delta_merge(df, period, keys=keys).collect()
+    return exp_merge_oracle(df, period, keys)
+
+
+IMPLS = ["native", "pandas"]
 
 
 class TestExpHistogram:
-    @pytest.mark.parametrize("engine", ENGINES)
-    def test_same_scale_merge(self, spark, engine):
+    @pytest.mark.parametrize("impl", IMPLS)
+    def test_same_scale_merge(self, spark, impl):
         rows = [
             ("e", ts(1), 6, 10.0, 2, 1, 3, [1, 2, 3]),
             ("e", ts(2), 9, 15.0, 2, 2, 5, [4, 5]),
@@ -200,16 +279,14 @@ class TestExpHistogram:
             "metric_name string, ts timestamp, e_count long, e_sum double, "
             "scale int, zero_count long, pos_offset int, pos_counts array<long>",
         )
-        out = exp_histogram_delta_merge(
-            df, "60 seconds", keys=("metric_name",), engine=engine
-        ).collect()[0]
+        out = exp_merge(df, impl)[0]
         assert out.e_count == 15 and out.zero_count == 3 and out.scale == 2
         # offsets 3..5 and 5..6 → merged span 3..6 = [1,2,3+4,5]
         assert out.pos_offset == 3
         assert out.pos_counts == [1, 2, 7, 5]
 
-    @pytest.mark.parametrize("engine", ENGINES)
-    def test_scale_alignment(self, spark, engine):
+    @pytest.mark.parametrize("impl", IMPLS)
+    def test_scale_alignment(self, spark, impl):
         """scale 2 point downscaled to scale 0: indices collapse 4→1
         (idx >> 2); verified against an independent brute-force oracle."""
         rows = [
@@ -221,9 +298,7 @@ class TestExpHistogram:
             "metric_name string, ts timestamp, e_count long, e_sum double, "
             "scale int, zero_count long, pos_offset int, pos_counts array<long>",
         )
-        out = exp_histogram_delta_merge(
-            df, "60 seconds", keys=("metric_name",), engine=engine
-        ).collect()[0]
+        out = exp_merge(df, impl)[0]
         # oracle
         import collections
 
@@ -239,8 +314,8 @@ class TestExpHistogram:
         assert out.e_count == 15
 
 
-    @pytest.mark.parametrize("engine", ENGINES)
-    def test_negative_buckets_merge(self, spark, engine):
+    @pytest.mark.parametrize("impl", IMPLS)
+    def test_negative_buckets_merge(self, spark, impl):
         """Negative bucket side mirrors the positive path (builder.rs:79-128
         merges both); verified against a brute-force oracle on both sides
         with mixed scales."""
@@ -254,9 +329,7 @@ class TestExpHistogram:
             "scale int, zero_count long, pos_offset int, pos_counts array<long>, "
             "neg_offset int, neg_counts array<long>",
         )
-        out = exp_histogram_delta_merge(
-            df, "60 seconds", keys=("metric_name",), engine=engine
-        ).collect()[0]
+        out = exp_merge(df, impl)[0]
         import collections
 
         for side, off_i, cnt_i in (("pos", 6, 7), ("neg", 8, 9)):
@@ -271,8 +344,8 @@ class TestExpHistogram:
         assert out.scale == 1 and out.e_count == 22 and out.zero_count == 1
         assert abs(out.e_sum + 8.0) < 1e-12
 
-    @pytest.mark.parametrize("engine", ENGINES)
-    def test_empty_sides_and_posonly_inputs(self, spark, engine):
+    @pytest.mark.parametrize("impl", IMPLS)
+    def test_empty_sides_and_posonly_inputs(self, spark, impl):
         """Inputs without neg columns still merge (empty negatives out);
         all-empty bucket lists produce empty arrays, not errors."""
         df = spark.createDataFrame(
@@ -280,13 +353,12 @@ class TestExpHistogram:
             "metric_name string, ts timestamp, e_count long, e_sum double, "
             "scale int, zero_count long, pos_offset int, pos_counts array<long>",
         )
-        out = exp_histogram_delta_merge(df, keys=("metric_name",), engine=engine).collect()[0]
+        out = exp_merge(df, impl)[0]
         assert out.pos_counts == [] and out.neg_counts == []
 
     def test_engine_parity_randomized(self, spark):
-        """native and pandas engines are semantically identical on a
-        randomized mixed-scale corpus (the parse-engine parity bar applied
-        to this operator)."""
+        """The production merge equals the driver-side numpy oracle on a
+        randomized mixed-scale corpus."""
         import numpy as np
 
         rng = np.random.RandomState(23)
@@ -312,23 +384,23 @@ class TestExpHistogram:
             "scale int, zero_count long, pos_offset int, pos_counts array<long>, "
             "neg_offset int, neg_counts array<long>",
         )
-        def canon(frame):
+        def canon(rows):
             return {
                 (r.metric_name, r.window_start): (
                     r.e_count, round(r.e_sum, 9), r.scale, r.zero_count,
                     r.pos_offset if r.pos_counts else None, tuple(r.pos_counts),
                     r.neg_offset if r.neg_counts else None, tuple(r.neg_counts),
                 )
-                for r in frame.collect()
+                for r in rows
             }
-        nat = canon(exp_histogram_delta_merge(df, keys=("metric_name",), engine="native"))
-        pan = canon(exp_histogram_delta_merge(df, keys=("metric_name",), engine="pandas"))
+        nat = canon(exp_merge(df, "native"))
+        pan = canon(exp_merge(df, "pandas"))
         assert nat == pan and len(nat) > 5
 
     def test_null_group_key_kept_both_engines(self, spark):
-        """A NULL key column must keep its group (the native engine joins
-        points back to scalars — that join must be null-safe, matching the
-        pandas engine's groupBy which retains null keys)."""
+        """A NULL key column must keep its group (the merge joins points
+        back to scalars — that join must be null-safe, matching the
+        oracle's groupBy which retains null keys)."""
         df = spark.createDataFrame(
             [
                 (None, ts(1), 2, 1.0, 1, 0, 0, [1, 1]),
@@ -338,30 +410,25 @@ class TestExpHistogram:
             "metric_name string, ts timestamp, e_count long, e_sum double, "
             "scale int, zero_count long, pos_offset int, pos_counts array<long>",
         )
-        for engine in ("native", "pandas"):
-            rows = {
-                r.metric_name: r
-                for r in exp_histogram_delta_merge(
-                    df, "600 seconds", keys=("metric_name",), engine=engine
-                ).collect()
-            }
-            assert set(rows) == {None, "m"}, engine
+        for impl in IMPLS:
+            rows = {r.metric_name: r for r in exp_merge(df, impl, "600 seconds")}
+            assert set(rows) == {None, "m"}, impl
             nul = rows[None]
-            assert nul.e_count == 5 and nul.scale == 0, engine
+            assert nul.e_count == 5 and nul.scale == 0, impl
             # scale-1 [1,1] at offset 0 folds to idx {0} sum 2 → plus the
             # scale-0 [2] at idx 0 → [4]
-            assert nul.pos_counts == [4], (engine, nul)
+            assert nul.pos_counts == [4], (impl, nul)
 
     def test_native_plan_is_jvm_only_partial_final(self, spark):
-        """The native engine must stay whole-stage JVM: no Python eval
-        nodes, and every aggregate partial+final."""
+        """The merge must stay whole-stage JVM: no Python eval nodes, and
+        every aggregate partial+final."""
         df = spark.createDataFrame(
             [("e", ts(1), 1, 1.0, 0, 0, 0, [1])],
             "metric_name string, ts timestamp, e_count long, e_sum double, "
             "scale int, zero_count long, pos_offset int, pos_counts array<long>",
         )
         plan = exp_histogram_delta_merge(
-            df, keys=("metric_name",), engine="native"
+            df, keys=("metric_name",)
         )._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan
         assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") >= 4

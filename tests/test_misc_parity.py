@@ -1,7 +1,5 @@
-"""Tests for topics, AnyValue, and the chaos/property fuzz of the parser —
-the validation_process.md chaos-decoding analog driven by hypothesis."""
+"""Tests for topics, AnyValue and the transcript readers."""
 
-from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from otel_arrow_spark.functions.anyvalue import (
@@ -39,30 +37,6 @@ class TestAnyValue:
         ).collect()[0]
         assert (out.vs, out.vi, out.vb, out.vby) == ("s", "7", "true", "cafe")
         assert out.is_int is True and out.is_str is False
-
-
-# chaos fuzz: arbitrary text (including adversarial near-matches of the
-# three grammars) must never raise, and both parse engines must agree.
-_adversarial = st.one_of(
-    st.text(max_size=60),
-    st.from_regex(r"(CALL tool=|span trace=|ERROR \[)?[a-z0-9 =\[\]._-]{0,40}", fullmatch=True),
-    st.sampled_from([
-        "", " ", "\n", "CALL tool=", "CALL tool=x args_len=y status=z dur_ms=0",
-        "ERROR [x] ", "ERROR [X] msg", "span trace=deadbeef span=beef event=a.b",
-        "INFO [ok] fine", "FATAL [io] down",
-    ]),
-)
-
-
-@settings(max_examples=20, deadline=None)
-@given(texts=st.lists(_adversarial, min_size=1, max_size=30))
-def test_parse_chaos_never_raises_and_engines_agree(spark, texts):
-    from otel_arrow_spark.operators.parse import parse_transcripts
-
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    a = parse_transcripts(df, engine="native").orderBy("text").collect()
-    b = parse_transcripts(df, engine="pandas").orderBy("text").collect()
-    assert a == b
 
 
 class TestReaders:

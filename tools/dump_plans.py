@@ -128,13 +128,12 @@ def main() -> None:
     )
     sections.append(
         (
-            "Exp-histogram delta merge (native engine)",
+            "Exp-histogram delta merge",
             "Expected: JVM-only (no `EvalPython` node) — scalar hash "
             "aggregate, join back for the scale shift, `Generate posexplode` "
-            "for the buckets, two more partial+final hash aggregates; the "
-            "pandas engine (kept as parity oracle) would instead show one "
-            "FlatMapGroupsInPandas that pays per-group Python overhead "
-            "(measured 103s vs 1.4s at sf0.1's ~40k groups).",
+            "for the buckets, two more partial+final hash aggregates (a "
+            "per-group FlatMapGroupsInPandas merge measured 103s vs 1.4s "
+            "at sf0.1's ~40k groups).",
             exp_histogram_delta_merge(exp, keys=("metric_name",)),
         )
     )
