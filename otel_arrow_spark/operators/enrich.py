@@ -6,7 +6,9 @@ attached to columns) and the attributes processor's insert/upsert actions
 (processors/attributes_processor/mod.rs:77). A dictionary is a small keyed
 lookup table; the Spark-native realization is a broadcast hash join — the
 dictionary ships to every executor once, the probe stays narrow (no
-shuffle), and the join is whole-stage-codegen'd.
+shuffle), and the join is whole-stage-codegen'd. The dictionaries are
+built on the driver as ``LocalRelation``s (``session.local_frame``), so
+their broadcast is built from driver-held rows without a Spark job.
 
 Unknown keys enrich to NULL via left join; rows are never dropped
 (FIXTURES.md §3).
@@ -18,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from otel_arrow_spark.session import local_frame
 from otel_arrow_spark.sources.transcripts import role_dict_rows, tool_dict_rows
 
 ROLE_DICT_SCHEMA = T.StructType(
@@ -39,11 +42,11 @@ TOOL_DICT_SCHEMA = T.StructType(
 
 
 def role_dict_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(role_dict_rows(), ROLE_DICT_SCHEMA)
+    return local_frame(spark, role_dict_rows(), ROLE_DICT_SCHEMA)
 
 
 def tool_dict_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(tool_dict_rows(), TOOL_DICT_SCHEMA)
+    return local_frame(spark, tool_dict_rows(), TOOL_DICT_SCHEMA)
 
 
 def enrich_with_dict(df: DataFrame, dim: DataFrame, key: str) -> DataFrame:

@@ -14,7 +14,8 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Tuned for the sandbox (local[32], 128 GiB). On a real cluster these are
 # overridden by spark-submit conf; the session-level defaults below are the
@@ -103,3 +104,29 @@ def small_state_conf(spark: SparkSession) -> Iterator[None]:
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A small driver-built table as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the rows into an
+    RDD (``Scan ExistingRDD``), so a broadcast of it runs a Spark job just
+    to collect them back. Built from an Arrow table instead, the same rows
+    plan as ``LocalTableScan`` (up to
+    ``spark.sql.execution.arrow.localRelationThreshold``, also with Arrow
+    conversion off) and their broadcast is built on the driver, no job.
+
+    ``rows`` are tuples in field order. Not for timestamp columns: Arrow
+    reads a naive ``datetime`` as UTC where the RDD path reads it as local
+    time, so the values would differ whenever the process's time zone is
+    not UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)

@@ -39,8 +39,9 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from otel_arrow_spark.session import small_state_conf
+from otel_arrow_spark.session import local_frame, small_state_conf
 
 BLOOM_DIR = "_bloomskip"
 
@@ -109,8 +110,10 @@ def _probe_rows(
     """(value_idx, word, mask) probe rows — positions computed by Spark
     itself on a values-sized local frame, so the hash matches the build
     side bit-for-bit (xxhash64 of the same type, same seed)."""
-    vals = spark.createDataFrame(
-        [(i,) for i in range(len(values))], "value_idx int"
+    vals = local_frame(
+        spark,
+        [(i,) for i in range(len(values))],
+        T.StructType([T.StructField("value_idx", T.IntegerType())]),
     ).withColumn(
         "v",
         F.element_at(

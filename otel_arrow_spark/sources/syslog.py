@@ -94,7 +94,10 @@ def parse_syslog(df: DataFrame, text_col: str = "line") -> DataFrame:
     """Parse a column of raw syslog/CEF lines into SYSLOG_SCHEMA fields.
 
     Detection order mirrors parser/mod.rs:46-104: RFC5424 → CEF → RFC3164 →
-    unknown (all-null fields, format='unknown', row kept).
+    unknown (all-null fields, format='unknown', row kept). An RFC5424 line
+    without the optional MSG part gets ``message`` '' rather than NULL,
+    because ``msg`` can legitimately match empty and so is kept as Arrow
+    reports the absent group.
     """
     import pandas as pd
     import pyarrow as pa

@@ -22,7 +22,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from otel_arrow_spark.session import local_frame
 from otel_arrow_spark.textops.dedup import cosine_expr, ensure_parallelism
 
 
@@ -148,13 +150,20 @@ def ivf_topk(
     probes = np.argsort(-(qn @ centroids.T), axis=1)[:, :nprobe]
     # (query_id, cluster_id) probe pairs — tiny, broadcast
     spark = index.sparkSession
-    probe_df = spark.createDataFrame(
+    probe_df = local_frame(
+        spark,
         [
             (int(r[0]), [float(x) for x in r[1]], int(c))
             for r, pr in zip(qrows, probes)
             for c in pr
         ],
-        f"{query_id_col} long, _qvec array<float>, cluster_id int",
+        T.StructType(
+            [
+                T.StructField(query_id_col, T.LongType()),
+                T.StructField("_qvec", T.ArrayType(T.FloatType())),
+                T.StructField("cluster_id", T.IntegerType()),
+            ]
+        ),
     )
     cand = index.join(F.broadcast(probe_df), on="cluster_id")
     scored = cand.withColumn(

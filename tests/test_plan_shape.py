@@ -46,6 +46,10 @@ def test_enrich_uses_broadcast_joins(spark, tiny_transcripts):
     plan = plan_of(enrich(parsed, spark))
     assert plan.count("BroadcastHashJoin") == 2, plan[:500]
     assert "SortMergeJoin" not in plan, "dictionary joins must never sort-merge"
+    # the dictionaries are driver-side LocalRelations: their broadcast
+    # needs no Spark job to collect an RDD scan
+    assert plan.count("LocalTableScan") == 2, plan
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_parse_is_arrow_vectorized_not_row_python(routed_plan):

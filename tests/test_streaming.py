@@ -549,8 +549,8 @@ def test_tail_sample_stream_matches_batch(spark, workdir):
     import os
 
     os.makedirs(d, exist_ok=True)
-    for i, part in enumerate(np.array_split(pdf, 4)):
-        part.to_parquet(f"{d}/part-{i:02d}.parquet", index=False)
+    for i, rows in enumerate(np.array_split(np.arange(len(pdf)), 4)):
+        pdf.iloc[rows].to_parquet(f"{d}/part-{i:02d}.parquet", index=False)
 
     batch_df = spark.read.parquet(d)
     want = tail_sample(batch_df, latency_ms=500, keep_prefix="10")
@@ -631,8 +631,9 @@ def test_d2c_stream_matches_batch(spark, workdir):
     pdf["stream"] = pdf["stream"].astype("int32")
     d = f"{workdir}/d2c_in"
     os.makedirs(d, exist_ok=True)
-    for i, part in enumerate(np.array_split(pdf, 4)):  # time-split → in order
-        part.to_parquet(f"{d}/part-{i:02d}.parquet", index=False)
+    # time-split → in order
+    for i, rows in enumerate(np.array_split(np.arange(len(pdf)), 4)):
+        pdf.iloc[rows].to_parquet(f"{d}/part-{i:02d}.parquet", index=False)
 
     batch_df = spark.read.parquet(d)
     want = {

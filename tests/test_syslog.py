@@ -12,6 +12,7 @@ def parsed_cases(spark):
     cases = [
         ("r54", "<165>1 2026-01-02T03:04:05Z web01 nginx 812 ID7 - GET /index"),
         ("r54sd", '<34>1 2026-01-02T03:04:05Z db01 pg 1 ID8 [ex@32473 k="v"] started'),
+        ("r54nomsg", "<165>1 2026-01-02T03:04:05Z web01 nginx 812 ID7 -"),
         ("r31", "<13>Feb  5 10:11:12 mail01 postfix[4242]: queue active"),
         ("cef", "CEF:0|SecCorp|IDS|1.0|SIG9|Port scan|7|src=10.0.0.5 dst=10.0.1.9 act=blocked"),
         ("cef_sys", "<13>Feb  5 10:11:12 gw01 CEF:0|V|P|1|S|N|3|src=1.2.3.4"),
@@ -37,6 +38,16 @@ def test_rfc5424_structured_data(parsed_cases):
     r = parsed_cases["r54sd"]
     assert r.structured_data == '[ex@32473 k="v"]'
     assert r.message == "started"
+
+
+def test_rfc5424_without_message_is_empty_string(parsed_cases):
+    """The optional MSG part is absent: ``message`` is '' (what Arrow's
+    extract_regex reports for a group that did not participate), not
+    NULL — the same value the DuckDB oracle's regexp_extract gives."""
+    r = parsed_cases["r54nomsg"]
+    assert r.format == "rfc5424"
+    assert (r.hostname, r.msg_id, r.structured_data) == ("web01", "ID7", None)
+    assert r.message == ""
 
 
 def test_rfc3164(parsed_cases):
