@@ -12,9 +12,9 @@ Reference analogs:
 
 Spark-first design: routing is a *derived column*, not a control-flow
 branch. A single ``F.when`` chain computes the exclusive first-match class;
-the fan-out is then either (a) one pass, ``write.partitionBy(route)`` — the
-scalable default: one job, no per-sink rescan — or (b) per-sink filtered
-writes when sinks need different formats/tables. Both are provided.
+the fan-out is then one pass, ``write.partitionBy(route)`` — one job, no
+per-sink rescan (``plans/pipeline.py``'s routed sink). Per-port delivery
+with failover is ``sinks.fanout_with_policy``.
 
 Routing key (FIXTURES.md §4), first-match precedence:
     error > warn > tool_call > span > chat (default)
@@ -74,58 +74,3 @@ def route_by_value(
     if default_route is None:
         routed = routed.filter(F.col("route").isNotNull())
     return routed
-
-
-def fanout_writes(
-    df: DataFrame,
-    sink_for_class: dict[str, str],
-    route_col: str = "signal_class",
-    fmt: str = "parquet",
-    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> dict[str, str]:
-    """Per-sink filtered writes (fanout_processor analog, sequential mode).
-
-    ``df`` is persisted so the scan+parse runs once, then each sink gets an
-    independent write action — mirroring the fanout processor's clone-to-N
-    with per-port failure isolation (fanout_processor README:12-40). Rows
-    are re-sorted within partitions to the stable ``(conv_id, turn_idx)``
-    order before write (the sort-for-compression analog,
-    go/pkg/otel/logs/arrow/optimizer.go:109).
-    """
-    df = df.persist()
-    try:
-        written = {}
-        for cls, path in sink_for_class.items():
-            (
-                df.filter(F.col(route_col) == cls)
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .format(fmt)
-                .save(path)
-            )
-            written[cls] = path
-        return written
-    finally:
-        df.unpersist()
-
-
-def fanout_single_pass(
-    df: DataFrame,
-    base_path: str,
-    route_col: str = "signal_class",
-    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> str:
-    """Single-pass fan-out: one write partitioned by the route column.
-
-    At 10^12-turn scale this is the right plan: one job, one scan, sinks are
-    hive partitions ``{base}/signal_class=<cls>/``. Equivalent to the
-    partition processor splitting one batch by a partition expression
-    (processors/partition_processor/mod.rs:1, README:13-31).
-    """
-    (
-        df.sortWithinPartitions(route_col, *sort_cols)
-        .write.mode("overwrite")
-        .partitionBy(route_col)
-        .parquet(base_path)
-    )
-    return base_path

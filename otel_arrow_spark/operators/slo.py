@@ -21,6 +21,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Bucket widths in microseconds. Buckets are fixed-width and epoch-aligned,
+# so they do not depend on the session time zone (a ``date_trunc`` would
+# truncate in it).
+_UNIT_MICROS = {
+    "second": 1_000_000,
+    "minute": 60_000_000,
+    "hour": 3_600_000_000,
+    "day": 86_400_000_000,
+}
 
 
 def burn_rate(
@@ -34,26 +45,44 @@ def burn_rate(
 ) -> DataFrame:
     """One row per short bucket: counts, short/long burn, alert flag.
 
-    ``short``/``long`` are calendar truncation units (``hour`` into
-    ``day`` by default) — short buckets tile long ones exactly, so the
-    long ratio is an exact re-sum of short-bucket counts. Burn values are
-    single IEEE divisions of exact integer counts — bit-identical in any
-    engine, so replay needs no rounding convention.
+    ``short``/``long`` are fixed-width units (``second``, ``minute``,
+    ``hour``, ``day``; ``hour`` into ``day`` by default) — short buckets
+    tile long ones exactly, so the long ratio is an exact re-sum of
+    short-bucket counts. Buckets are cut on epoch microseconds: a
+    ``timestamp_ntz`` column is read as UTC wall-clock time and
+    ``bucket_start`` stays ``timestamp_ntz``; a ``timestamp`` column is
+    cut on its instant. The rows are the same under any session time
+    zone. Burn values are single IEEE divisions of exact integer counts —
+    bit-identical in any engine, so replay needs no rounding convention.
     """
+    for unit in (short, long):
+        if unit not in _UNIT_MICROS:
+            raise ValueError(f"unit must be one of {sorted(_UNIT_MICROS)}, got {unit!r}")
+    short_us, long_us = _UNIT_MICROS[short], _UNIT_MICROS[long]
+    if long_us % short_us:
+        raise ValueError(f"{short!r} buckets must tile {long!r} buckets")
     budget = 1.0 - slo
+    ts, bucket_us = F.col(ts_col), F.col("bucket_us")
+    if isinstance(events.schema[ts_col].dataType, T.TimestampNTZType):
+        epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
+        micros = F.timestamp_diff("MICROSECOND", epoch, ts)
+        bucket_start = F.timestamp_add("MICROSECOND", bucket_us, epoch)
+    else:
+        micros = F.unix_micros(ts)
+        bucket_start = F.timestamp_micros(bucket_us)
     bucketed = events.groupBy(
-        F.date_trunc(short, F.col(ts_col)).alias("bucket_start")
+        (micros - F.pmod(micros, F.lit(short_us))).alias("bucket_us")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(error_pred.cast("long")).alias("n_errors"),
     )
-    wl = Window.partitionBy(F.date_trunc(long, F.col("bucket_start")))
+    wl = Window.partitionBy(bucket_us - F.pmod(bucket_us, F.lit(long_us)))
     long_events = F.sum("n_events").over(wl)
     long_errors = F.sum("n_errors").over(wl)
     short_burn = F.col("n_errors") / F.col("n_events") / F.lit(budget)
     long_burn = long_errors / long_events / F.lit(budget)
     return bucketed.select(
-        "bucket_start",
+        bucket_start.alias("bucket_start"),
         "n_events",
         "n_errors",
         short_burn.alias("short_burn"),

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from otel_arrow_spark.plans.corpus import CorpusConfig, run_corpus_clean
 from otel_arrow_spark.plans.pipeline import PipelineConfig, run_pipeline
+from otel_arrow_spark.sinks import SINK_PARQUET_OPTIONS
 
 
 class SpecError(ValueError):
@@ -196,7 +197,7 @@ def run_transform(spark: SparkSession, cfg: TransformConfig) -> dict:
             v = snapshot_overwrite(spark, observed, path)
             manifest["sinks"][f"{name}_version"] = v
         else:
-            observed.write.mode("overwrite").parquet(path)
+            observed.write.mode("overwrite").options(**SINK_PARQUET_OPTIONS).parquet(path)
         manifest["metrics"][f"rows_{name}"] = obs.get["rows"]
         manifest["sinks"][name] = path
     with open(os.path.join(cfg.output_dir, "MANIFEST.json"), "w") as f:

@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from otel_arrow_spark.sinks import SINK_PARQUET_OPTIONS
+
 
 @dataclass
 class CorpusConfig:
@@ -231,6 +233,7 @@ def run_corpus_clean(
         build_packed(observed, cfg)
         .sortWithinPartitions("source", "lang", "bin_idx")
         .write.mode("overwrite")
+        .options(**SINK_PARQUET_OPTIONS)
         .partitionBy("source", "lang")
         .parquet(out_path)
     )

@@ -18,11 +18,13 @@ Scale notes (the part that must survive 100 TB):
   derived column): zero shuffles before the sinks;
 * the routed-rows sink is a single-pass ``partitionBy(signal_class)``
   write — one job, one scan, no per-sink rescan;
-* aggregates run off the persisted routed frame and shuffle once on the
-  group keys — Spark's partial (map-side) + final hash aggregate already
+* aggregates re-read the routed parquet and shuffle once on the group
+  keys — Spark's partial (map-side) + final hash aggregate already
   reduces a hot conversation to one partial row per map task;
 * everything downstream of the scan is column-pruned automatically: the
-  sink projection lists columns explicitly.
+  sink projection lists columns explicitly;
+* both sinks are zstd parquet with v2 data pages
+  (``sinks.SINK_PARQUET_OPTIONS``), set on each writer.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from otel_arrow_spark.operators.aggregate import sink_aggregate
 from otel_arrow_spark.operators.enrich import enrich
 from otel_arrow_spark.operators.parse import parse_transcripts
 from otel_arrow_spark.operators.route import SIGNAL_CLASSES, with_signal_class
+from otel_arrow_spark.sinks import SINK_PARQUET_OPTIONS
 
 SINK_COLUMNS = [
     "conv_id",
@@ -152,6 +155,7 @@ def run_pipeline(
         (
             observed.sortWithinPartitions("signal_class", "conv_id", "turn_idx")
             .write.mode("overwrite")
+            .options(**SINK_PARQUET_OPTIONS)
             .partitionBy("signal_class")
             .parquet(routed_path)
         )
@@ -172,7 +176,12 @@ def run_pipeline(
         t0 = time.monotonic()
         routed_df = spark.read.parquet(routed_path)
         agg = sink_aggregate(routed_df, ("signal_class", *cfg.agg_keys))
-        agg.write.mode("overwrite").partitionBy("signal_class").parquet(agg_root)
+        (
+            agg.write.mode("overwrite")
+            .options(**SINK_PARQUET_OPTIONS)
+            .partitionBy("signal_class")
+            .parquet(agg_root)
+        )
         manifest["timings_sec"]["agg_write"] = round(time.monotonic() - t0, 3)
         _commit(agg_root)
     for cls in SIGNAL_CLASSES:

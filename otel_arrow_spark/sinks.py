@@ -32,6 +32,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Writer options of every parquet sink the plans and streaming jobs write.
+# Set on each writer, never as a session conf. zstd at its default level
+# with v2 data pages (DELTA_BINARY_PACKED ints and timestamps,
+# DELTA_BYTE_ARRAY for non-dictionary strings); on transcripts_etl's
+# routed + aggregate output, B/turn (100k turns, seed 11):
+#   snappy, v1 pages 74.63 | zstd 47.79 | zstd + v2 pages 44.33 (-40.6%)
+# for 0-7% more write time (BASELINE.md). Measured to lose: zstd level 1
+# (50.46) and level 9 (46.09, slower routed write), gzip (46.69), lz4
+# (83.30). Spark's streaming file sink takes the codec from these options
+# but not the page version, so its files are zstd with v1 pages.
+SINK_PARQUET_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
+
 
 def iceberg_catalog(df: DataFrame) -> str | None:
     """Name of a configured Iceberg catalog, or None."""
@@ -71,7 +83,6 @@ def write_table(
     partition_by: tuple[str, ...] = (),
     sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     mode: str = "overwrite",
-    compression: str | None = None,
 ) -> str:
     """Write a table with stable ordering and partition layout.
 
@@ -80,7 +91,8 @@ def write_table(
     partitions by (partition_by..., sort_cols...) so (a) the file writer
     keeps a single open writer per task (no per-partition writer fanout)
     and (b) parquet gets sorted runs to dictionary/RLE-encode — the
-    sort-for-compression invariant.
+    sort-for-compression invariant. Parquet is written with
+    ``SINK_PARQUET_OPTIONS``.
     """
     order = [c for c in (*partition_by, *sort_cols) if c in df.columns]
     out = df.sortWithinPartitions(*order) if order else df
@@ -100,13 +112,9 @@ def write_table(
                 ) from ex
             raise
         return plan["table"]
-    w = out.write.mode(mode)
+    w = out.write.mode(mode).options(**SINK_PARQUET_OPTIONS)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if compression:
-        # snappy (spark default) for hot intermediates; zstd for cold
-        # sinks — measured ~35% smaller at sf0.1, see BASELINE.md
-        w = w.option("compression", compression)
     w.parquet(target)
     return target
 
@@ -465,7 +473,6 @@ def compact_parquet_dir(
     target_file_bytes: int = 512 * 1024 * 1024,
     partition_by: tuple[str, ...] = (),
     sort_cols: tuple[str, ...] = (),
-    compression: str | None = None,
     refresh_sidecars: bool = True,
 ) -> dict:
     """Small-file compaction for a parquet sink directory — the
@@ -546,11 +553,9 @@ def compact_parquet_dir(
     tmp = path.rstrip("/") + ".__compact_tmp"
     old = path.rstrip("/") + ".__compact_old"
     shutil.rmtree(tmp, ignore_errors=True)
-    w = out.write.mode("overwrite")
+    w = out.write.mode("overwrite").options(**SINK_PARQUET_OPTIONS)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if compression:
-        w = w.option("compression", compression)
     w.parquet(tmp)
 
     got = spark.read.parquet(tmp).count()

@@ -29,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from otel_arrow_spark.operators.enrich import enrich
 from otel_arrow_spark.operators.parse import parse_transcripts
 from otel_arrow_spark.operators.route import with_signal_class
+from otel_arrow_spark.sinks import SINK_PARQUET_OPTIONS
 from otel_arrow_spark.sources.transcripts import transcripts_schema
 
 
@@ -68,6 +69,7 @@ def stream_pipeline(
     routed = build_stream_routed(spark, stream_transcripts_source(spark, input_dir))
     writer = (
         routed.writeStream.format("parquet")
+        .options(**SINK_PARQUET_OPTIONS)
         .option("path", f"{output_dir}/routed")
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("signal_class")
@@ -108,6 +110,7 @@ def stream_syslog_parse(
     parsed = parse_syslog(lines)
     writer = (
         parsed.writeStream.format("parquet")
+        .options(**SINK_PARQUET_OPTIONS)
         .option("path", f"{output_dir}/syslog")
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -156,6 +159,7 @@ def stream_logs_star_encode(
             (
                 frame.withColumn("batch_id", F.lit(batch_id).cast("long"))
                 .write.mode("overwrite")
+                .options(**SINK_PARQUET_OPTIONS)
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id")
                 .parquet(f"{output_dir}/{name}")
@@ -206,6 +210,7 @@ def stream_histogram_reaggregation(
     merged = op(stream, period, keys=keys)
     writer = (
         merged.writeStream.format("parquet")
+        .options(**SINK_PARQUET_OPTIONS)
         .option("path", f"{output_dir}/hist")
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -256,6 +261,7 @@ def stream_temporal_reaggregation(
     )
     writer = (
         agg.writeStream.format("parquet")
+        .options(**SINK_PARQUET_OPTIONS)
         .option("path", f"{output_dir}/temporal")
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -321,6 +327,7 @@ def stream_interval_join(
     )
     writer = (
         joined.writeStream.format("parquet")
+        .options(**SINK_PARQUET_OPTIONS)
         .option("path", f"{output_dir}/correlated")
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -451,7 +458,7 @@ def stream_dedup_against_index(
         surv = dedup_against_index(batch, idx, text_col, id_col)
         surv.persist()
         try:
-            surv.write.mode("append").parquet(output_dir)
+            surv.write.mode("append").options(**SINK_PARQUET_OPTIONS).parquet(output_dir)
             text_fingerprints(surv, text_col).write.mode("append").parquet(
                 index_path
             )
@@ -584,6 +591,7 @@ def stream_otlp_decode(
     flat = parsers[signal](stream)
     writer = (
         flat.writeStream.format("parquet")
+        .options(**SINK_PARQUET_OPTIONS)
         .option("path", f"{output_dir}/otlp_{signal}")
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -39,3 +39,23 @@ def assert_df_equal(a, b, msg=""):
     extra = a.exceptAll(b).count()
     missing = b.exceptAll(a).count()
     assert extra == 0 and missing == 0, f"{msg} rows differ: extra={extra} missing={missing}"
+
+
+def parquet_column_chunks(path):
+    """Footer metadata of every column chunk in the parquet data files
+    under ``path``: ``{column: [(compression, encodings), ...]}``."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    assert files, f"no parquet files under {path}"
+    chunks: dict = {}
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for i in range(md.num_columns):
+                c = md.row_group(g).column(i)
+                chunks.setdefault(c.path_in_schema, []).append((c.compression, c.encodings))
+    return chunks

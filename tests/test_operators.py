@@ -301,6 +301,49 @@ class TestBurnRate:
         assert out[0].long_burn == 4.0 and out[1].long_burn == 0.0
 
 
+    @pytest.mark.parametrize("ts_type", ["timestamp_ntz", "timestamp"])
+    def test_same_rows_under_any_session_time_zone(self, spark, ts_type):
+        """Buckets are cut on epoch time, not in the session time zone:
+        half-hour (Asia/Kolkata) and negative (America/New_York) offsets
+        leave the hour and day buckets where UTC puts them."""
+        import datetime as dt
+
+        from otel_arrow_spark.operators.slo import burn_rate
+
+        rows = [
+            ("error", "2024-01-01 23:40:00"),
+            ("ok", "2024-01-02 00:10:00"),
+            ("ok", "2024-01-02 04:50:00"),
+        ]
+        df = spark.createDataFrame(rows, "event_type string, ts string")
+        # a zone in the string pins the instant whatever the session zone;
+        # without one, timestamp_ntz keeps the wall-clock time
+        ts = F.concat("ts", F.lit("Z")) if ts_type == "timestamp" else F.col("ts")
+        df = df.withColumn("ts", ts.cast(ts_type))
+        key = "spark.sql.session.timeZone"
+        saved = spark.conf.get(key)
+        got = {}
+        try:
+            for tz in ("UTC", "America/New_York", "Asia/Kolkata"):
+                spark.conf.set(key, tz)
+                got[tz] = sorted(
+                    tuple(r) for r in
+                    burn_rate(df, F.col("event_type") == "error", slo=0.75).collect()
+                )
+        finally:
+            spark.conf.set(key, saved)
+        assert spark.conf.get(key) == saved
+        assert got["America/New_York"] == got["UTC"] == got["Asia/Kolkata"]
+        hours = [r[0] for r in got["UTC"]]
+        if ts_type == "timestamp_ntz":
+            assert hours == [
+                dt.datetime(2024, 1, 1, 23), dt.datetime(2024, 1, 2, 0),
+                dt.datetime(2024, 1, 2, 4),
+            ]
+        # 23:00 is alone in its day (burn 4.0); the next day has no errors
+        assert [r[4] for r in got["UTC"]] == [4.0, 0.0, 0.0]
+
+
 class TestFlow:
     def test_conditional_branches_exclusive_first_match(self, spark):
         df = spark.createDataFrame([(i,) for i in range(10)], "x int")

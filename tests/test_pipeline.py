@@ -137,6 +137,50 @@ def test_stable_order_within_sink_files(spark, result):
     )
 
 
+
+def test_sinks_are_zstd_with_delta_timestamps(result):
+    """Both sinks are written with SINK_PARQUET_OPTIONS: every column
+    chunk is zstd, and v2 pages delta-encode the routed ``ts``."""
+    from tests.conftest import parquet_column_chunks
+
+    routed = parquet_column_chunks(result.routed_path)
+    agg = parquet_column_chunks(os.path.dirname(result.agg_path("chat")))
+    for chunks in (routed, agg):
+        assert {comp for cs in chunks.values() for comp, _ in cs} == {"ZSTD"}
+    assert all("DELTA_BINARY_PACKED" in enc for _, enc in routed["ts"])
+
+
+def test_sinks_read_back_outside_spark(result):
+    """DuckDB and pyarrow both read the zstd/v2 sinks: per-class row
+    counts match the lineage counters, and the aggregate accounts for
+    every input row."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    m = result.manifest["metrics"]
+    expected = {k.removeprefix("routed_"): v for k, v in m.items() if k.startswith("routed_")}
+    routed = result.routed_path
+    duck = dict(
+        duckdb.sql(
+            f"""
+            SELECT signal_class, count(*)
+            FROM read_parquet('{routed}/*/*.parquet', hive_partitioning=true)
+            GROUP BY 1
+            """
+        ).fetchall()
+    )
+    assert duck == expected
+    classes = ds.dataset(routed, format="parquet", partitioning="hive").to_table(
+        columns=["signal_class"]
+    )["signal_class"]
+    arrow = {d["values"]: d["counts"] for d in pc.value_counts(classes).to_pylist()}
+    assert arrow == expected
+    agg_root = os.path.dirname(result.agg_path("chat"))
+    n_turns = duckdb.sql(
+        f"SELECT sum(n_turns) FROM read_parquet('{agg_root}/*/*.parquet')"
+    ).fetchone()[0]
+    assert n_turns == m["rows_in"]
+
 class TestCorpusClean:
     """Composed corpus-cleaning pipeline (plans/corpus.py): single-pass
     lineage, sink consistency, resume."""

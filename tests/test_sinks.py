@@ -144,18 +144,20 @@ class TestContribSinkContracts:
 
 
 def test_write_table_zstd_roundtrip(spark, tiny_transcripts, workdir):
-    """compression='zstd' writes readable parquet smaller than snappy."""
+    """write_table writes zstd parquet that reads back whole and is
+    smaller than Spark's default parquet of the same frame."""
     import os
 
     from otel_arrow_spark.sinks import write_table
+    from tests.conftest import parquet_column_chunks
 
     df = spark.read.parquet(tiny_transcripts)
-    a = write_table(df, f"{workdir}/comp_snappy", sort_cols=("conv_id", "turn_idx"))
-    b = write_table(
-        df, f"{workdir}/comp_zstd", sort_cols=("conv_id", "turn_idx"),
-        compression="zstd",
-    )
-    assert spark.read.parquet(b).count() == df.count()
+    plain = f"{workdir}/comp_default"
+    df.write.mode("overwrite").parquet(plain)
+    out = write_table(df, f"{workdir}/comp_sink", sort_cols=("conv_id", "turn_idx"))
+    assert spark.read.parquet(out).count() == df.count()
+    codecs = {comp for chunks in parquet_column_chunks(out).values() for comp, _ in chunks}
+    assert codecs == {"ZSTD"}
 
     def size(p):
         return sum(
@@ -163,7 +165,7 @@ def test_write_table_zstd_roundtrip(spark, tiny_transcripts, workdir):
             for r, _, fs in os.walk(p) for f in fs if f.endswith(".parquet")
         )
 
-    assert size(b) < size(a)
+    assert size(out) < size(plain)
 
 
 class TestFanoutPolicy:

@@ -60,6 +60,20 @@ def test_stream_restart_is_exactly_once(spark, tiny_transcripts, workdir):
     assert n1 == n2 > 0
 
 
+
+def test_stream_routed_files_are_zstd(spark, tiny_transcripts, workdir):
+    """The streaming file sink writes with SINK_PARQUET_OPTIONS too (its
+    codec; the file sink does not take the page version)."""
+    from tests.conftest import parquet_column_chunks
+
+    out = f"{workdir}/stream_zstd"
+    q = stream_pipeline(
+        spark, tiny_transcripts, out, f"{workdir}/stream_zstd_ckpt", available_now=True
+    )
+    q.awaitTermination(300)
+    chunks = parquet_column_chunks(f"{out}/routed")
+    assert {comp for cs in chunks.values() for comp, _ in cs} == {"ZSTD"}
+
 def test_stream_temporal_reaggregation(spark, tiny_transcripts, workdir):
     out = f"{workdir}/stream_temporal"
     q = stream_temporal_reaggregation(
