@@ -1303,14 +1303,14 @@ def q_transcripts_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_transcripts_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_spark.operators.aggregate import salted_aggregate
+    from otel_arrow_spark.operators.aggregate import sink_aggregate
     from otel_arrow_spark.operators.enrich import enrich
     from otel_arrow_spark.operators.parse import parse_transcripts
     from otel_arrow_spark.operators.route import with_signal_class
 
     df = _transcripts(spark, sf_dir)
     routed = with_signal_class(enrich(parse_transcripts(df), spark))
-    return salted_aggregate(routed, keys=("signal_class", "conv_id", "tool", "severity_text"))
+    return sink_aggregate(routed, keys=("signal_class", "conv_id", "tool", "severity_text"))
 
 
 def _paragraph_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1841,13 +1841,13 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Critical-path analysis (operators/trace_tree.py critical_paths):
     per trace, the root-to-leaf chain with the largest cumulative span
-    duration — frontier BFS carrying the running total. Oracle = DuckDB
+    duration — pointer doubling carrying the running total. Oracle = DuckDB
     recursive CTE accumulating the same chain, lexicographic-max pick."""
     from otel_arrow_spark.operators.trace_tree import critical_paths
 
     p = _spans_dir(sf_dir)
     spans = spark.read.parquet(f"{p}/spans.parquet")
-    out = critical_paths(spans, method="doubling")
+    out = critical_paths(spans)
     return out.select(
         "trace_id", "critical_ms",
         F.col("critical_depth").cast("int").alias("critical_depth"),
@@ -2125,7 +2125,7 @@ def q_service_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_trace_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trace-tree assembly (operators/trace_tree.py): frontier-BFS span
+    """Trace-tree assembly (operators/trace_tree.py): pointer-doubling span
     depths over parent_span_id + per-trace rollup (root name, wall time,
     error count, max depth). Oracle = DuckDB recursive CTE walking the
     same tree."""
@@ -2133,7 +2133,7 @@ def q_trace_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p = _spans_dir(sf_dir)
     spans = spark.read.parquet(f"{p}/spans.parquet")
-    roll = trace_rollup(spans, span_depths(spans, method="doubling"))
+    roll = trace_rollup(spans, span_depths(spans))
     return roll.select(
         "trace_id", "n_spans", "root_name", "n_errors",
         F.col("max_depth").cast("int").alias("max_depth"), "wall_ms",
@@ -3506,7 +3506,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     corpus_clean (changed in r5) sit just past the window and are covered
     transitively: logs_star by the in-window syslog_star/otlp round-trips
     sharing its encoder, trace-tree math by trace_rollup's r4-green twin
-    plus the pointer-doubling parity tests, the funnel by
+    plus the Python-walk trace-tree tests, the funnel by
     corpus_clean_history and corpus_clean_semantic.
     Every entry past position 50 is driver-green in CORRECTNESS_r04 or
     was re-verified via tools/check_oracles.py this round (full-registry
@@ -3632,8 +3632,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "syslog_parse": q_syslog_parse,
         "chunk_docs": q_chunk_docs,  # oracle-only empty-text guard; fixture
                                      # has no empty docs — re-verified locally
-        "trace_rollup": q_trace_rollup,  # doubling variant parity-tested vs
-                                         # BFS and re-verified locally
+        "trace_rollup": q_trace_rollup,
         "exp_quantile": q_exp_quantile,
         "service_graph": q_service_graph,
         "span_metrics": q_span_metrics,

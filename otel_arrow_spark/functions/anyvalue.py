@@ -30,17 +30,17 @@ ANYVALUE_SCHEMA = T.StructType(
 
 TYPE_EMPTY, TYPE_STR, TYPE_INT, TYPE_DOUBLE, TYPE_BOOL, TYPE_BYTES, TYPE_SER = range(7)
 
-def _mk(tag: int, s=None, i=None, d=None, b=None, by=None, ser=None) -> Column:
+def _mk(tag: int, s=None, i=None, b=None, by=None) -> Column:
     # built lazily — Column construction needs an active SparkContext
     _N = F.lit(None)
     return F.struct(
         F.lit(tag).alias("type"),
         (s if s is not None else _N.cast("string")).alias("str"),
         (i if i is not None else _N.cast("long")).alias("int"),
-        (d if d is not None else _N.cast("double")).alias("double"),
+        _N.cast("double").alias("double"),
         (b if b is not None else _N.cast("boolean")).alias("bool"),
         (by if by is not None else _N.cast("binary")).alias("bytes"),
-        (ser if ser is not None else _N.cast("string")).alias("ser"),
+        _N.cast("string").alias("ser"),
     )
 
 
@@ -52,22 +52,12 @@ def any_int(c: Column) -> Column:
     return _mk(TYPE_INT, i=c.cast("long"))
 
 
-def any_double(c: Column) -> Column:
-    return _mk(TYPE_DOUBLE, d=c.cast("double"))
-
-
 def any_bool(c: Column) -> Column:
     return _mk(TYPE_BOOL, b=c)
 
 
 def any_bytes(c: Column) -> Column:
     return _mk(TYPE_BYTES, by=c)
-
-
-def any_ser(c: Column) -> Column:
-    """Serialized (JSON) branch — maps/arrays stored as their JSON text
-    (the reference's cbor/ser branch)."""
-    return _mk(TYPE_SER, ser=c)
 
 
 def any_value_as_string(v: Column) -> Column:

@@ -1,4 +1,4 @@
-"""Aggregate stage: per-sink grouped aggregation, temporal windows, salting.
+"""Aggregate stage: per-sink grouped aggregation, temporal windows.
 
 Reference analogs:
 
@@ -10,10 +10,10 @@ Reference analogs:
   (map-side partial → shuffle → final).
 * temporal reaggregation processor — regrouping into coarser fixed periods
   keyed by stream identity (temporal_reaggregation_processor/mod.rs:1,
-  identity.rs:28-60) → ``F.window(ts, period)`` group.
-* hot-key handling via arbitrary partition expressions
-  (partition_processor/README.md:13-31) → explicit salted two-phase
-  aggregation for skewed conversations (FIXTURES.md §6).
+  identity.rs:28-60) → ``F.window(ts, window, slide)`` group.
+* hot keys (skewed conversations, FIXTURES.md §6) need no special path:
+  the partial aggregate runs before the shuffle, so a hot key leaves each
+  map task as one partial row.
 """
 
 from __future__ import annotations
@@ -56,8 +56,9 @@ def hopping_aggregate(
     is the algorithm's inherent cost, bounded by the ratio (2× for the
     defaults), never a self-join per offset.
 
-    ``aggs``: aggregate Columns (default: count + duration sum/avg,
-    matching temporal_aggregate).
+    ``aggs``: aggregate Columns (default: count + duration sum/avg).
+    With ``slide == window`` the windows tumble (the reference's
+    temporal reaggregation).
     """
     if not aggs:
         aggs = (
@@ -73,37 +74,6 @@ def hopping_aggregate(
         F.col("w.end").alias("window_end"),
         *keys,
         *agg_cols,
-    )
-
-
-def temporal_aggregate(
-    df: DataFrame,
-    period: str = "60 seconds",
-    keys: tuple[str, ...] = ("signal_class",),
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling-window reaggregation (temporal_reaggregation default 60s).
-
-    Batch form of the stateful streaming version in streaming/jobs.py; the
-    window start/end are materialized as plain columns so results compare
-    against SQL oracles.
-    """
-    w = F.window(F.col(ts_col), period)
-    return (
-        df.groupBy(w.alias("w"), *keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("duration_ms").alias("sum_duration_ms"),
-            F.avg("duration_ms").alias("avg_duration_ms"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *keys,
-            "n_rows",
-            "sum_duration_ms",
-            "avg_duration_ms",
-        )
     )
 
 
@@ -179,43 +149,6 @@ def capped_reaggregate(
             yield out
 
     return df.select(*key_list, value_col).mapInPandas(run, schema=out_schema)
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: tuple[str, ...] = ("conv_id", "tool", "severity_text"),
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase (salted) count/min/max aggregation for hot keys.
-
-    Phase 1 groups on (keys..., salt) where salt = a deterministic hash of
-    the row's turn_idx modulo n_salts — a hot conversation's rows spread
-    over ``n_salts`` reducers. Phase 2 merges the partials (count→sum,
-    min→min, max→max), the same partial/final decomposition the reference's
-    recordset engine applies to avg (summaries.rs:12-135).
-
-    Produces results identical to :func:`sink_aggregate` (asserted by the
-    skew fixture test).
-
-    When to use: ONLY for aggregates Spark cannot partially combine
-    map-side (collect_list/set, exact distinct counts, exact percentiles).
-    For algebraic aggregates (count/sum/min/max/avg) Spark's hash aggregate
-    already runs a partial phase before the shuffle — a hot key leaves each
-    map task as a single partial row — so explicit salting just adds a
-    second shuffle (measured ~2x agg cost at 2M rows), which is why the
-    pipeline always uses :func:`sink_aggregate`.
-    """
-    salt = F.pmod(F.coalesce(F.col("turn_idx"), F.lit(0)), F.lit(n_salts)).alias("_salt")
-    partial = df.groupBy(*keys, salt).agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.min("ts").alias("_tmin"),
-        F.max("ts").alias("_tmax"),
-    )
-    return partial.groupBy(*keys).agg(
-        F.sum("_cnt").alias("n_turns"),
-        F.min("_tmin").alias("ts_min"),
-        F.max("_tmax").alias("ts_max"),
-    )
 
 
 def rollup_aggregate(

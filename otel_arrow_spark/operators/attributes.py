@@ -154,12 +154,6 @@ def apply_attributes_filter(df: DataFrame, attrs_col: str, predicate) -> DataFra
     return df.withColumn(attrs_col, F.map_filter(F.col(attrs_col), predicate))
 
 
-def apply_attributes_transform(df: DataFrame, attrs_col: str, fn) -> DataFrame:
-    """OPL ``apply attributes { set value = <fn(key, value)> }`` →
-    transform_values."""
-    return df.withColumn(attrs_col, F.transform_values(F.col(attrs_col), fn))
-
-
 def explode_attrs(df: DataFrame, attrs_col: str, id_cols: tuple[str, ...]) -> DataFrame:
     """Map column → exploded long-format table (parent_id, key, value) —
     the reference's native attrs layout (docs/data_model.md:290-306), for

@@ -11,7 +11,7 @@ otlp/logs.go) re-expressed as DataFrame transforms:
   analog is a STABLE HASH of the row's natural key: no shuffle, no
   row_number-over-everything single task, deterministic across runs and
   engines. The log surrogate id is **128 bits wide** — two independent
-  ``xxhash64`` values (the second salted) as ``(id_hi, id_lo)`` column
+  ``xxhash64`` values (the second prefixed) as ``(id_hi, id_lo)`` column
   pairs: at the 10^12-row target a single 64-bit id expects ~2.7×10^7
   colliding pairs by the birthday bound (n²/2^65), silently merging
   unrelated rows' attributes on decode; at 128 bits the expectation is

@@ -87,10 +87,6 @@ def theta_sketches(
     return df.groupBy(*by).agg(*aggs) if by else df.agg(*aggs)
 
 
-def theta_estimate(sketch: F.Column) -> F.Column:
-    return F.theta_sketch_estimate(sketch)
-
-
 def retention_estimates(
     day_sketches: DataFrame, day_col: str = "day"
 ) -> DataFrame:

@@ -7,15 +7,14 @@ Reference analog: SPANS.parent_span_id (docs/data_model.md:338) carries
 the tree; the reference transports it but has no tree-walk operator —
 this is the downstream-analytics surface over that column.
 
-Scale shape (``span_depths``): frontier BFS — one equi-join per tree
-LEVEL (not per span): round d joins the level-d frontier against the
-child edge list on (trace_id, parent pointer), all hash joins on
-(trace_id, span hex) pairs, ids-only until the final join-back. Trace
-depth bounds the rounds (real traces: < 20 levels; the fixture: ~10).
-The frontier is localCheckpoint-ed per round so the plan never grows.
-Root-cause joins stay within a trace, so a hot trace bounds skew by its
-own span count. Like connected_components, the loop HARD-FAILS rather
-than returning partial depths when max_iter is hit.
+Scale shape (``span_depths``, ``critical_paths``): pointer doubling —
+each round is one self-join of the (trace_id, span hex) pointer table
+that doubles every unfinished pointer's reach, so a trace of depth D
+finishes in O(log D) rounds (depth ~10: 4 rounds; depth 1000: ~10).
+Each round's output is localCheckpoint-ed so the plan never grows. The
+joins stay within a trace, so a hot trace bounds skew by its own span
+count. Like connected_components, the walk HARD-FAILS rather than
+returning partial depths when max_iter rounds do not converge.
 """
 
 from __future__ import annotations
@@ -28,11 +27,11 @@ from otel_arrow_spark.session import small_state_conf
 
 def _doubling_ptrs(spans: DataFrame, max_iter: int, with_sum: bool
                    ) -> tuple[DataFrame, DataFrame]:
-    """Pointer-doubling ancestor walk shared by the ``doubling`` variants
-    of span_depths / critical_paths: O(log depth) rounds instead of the
-    BFS's O(depth) — round k's self-join doubles every unfinished
-    pointer's reach, so depth-1000 chains finish in ~10 rounds where the
-    BFS needs 1000.
+    """Pointer-doubling ancestor walk shared by span_depths and
+    critical_paths: round k's self-join doubles every unfinished
+    pointer's reach, so the walk takes O(log depth) rounds where a
+    level-by-level walk takes O(depth) — depth-1000 chains finish in
+    ~10 rounds.
 
     Each non-root span carries a pointer row (node, anc, d[, s]): ``anc``
     is an ancestor at distance ``d`` (``s`` = duration sum over
@@ -41,9 +40,9 @@ def _doubling_ptrs(spans: DataFrame, max_iter: int, with_sum: bool
     at their anc: the jump composes distances (and sums); landing on a
     finished pointer finishes the row. Rows whose anc is neither a root
     nor a present node are orphan chains — the inner join drops them,
-    cascading over rounds exactly like the BFS's absent-by-policy rule.
+    cascading over rounds, so orphans are absent from the output.
     Unfinished rows after ``max_iter`` doubling rounds (reach 2^max_iter)
-    can only be cycle members — hard-fail, same contract as the BFS.
+    can only be cycle members — hard-fail.
 
     Returns (roots, finished_pointers)."""
     root_cols = ["trace_id", F.col("span_id_hex").alias("node")]
@@ -61,7 +60,7 @@ def _doubling_ptrs(spans: DataFrame, max_iter: int, with_sum: bool
         "trace_id",
         F.col("span_id_hex").alias("node"),
         F.col("parent_span_id").alias("anc"),
-        F.lit(1).cast("int").alias("d"),  # int to match the BFS depth type
+        F.lit(1).cast("int").alias("d"),
     ]
     if with_sum:
         cols.append(F.col("duration_ms").cast("long").alias("s"))
@@ -129,95 +128,28 @@ def _doubling_ptrs(spans: DataFrame, max_iter: int, with_sum: bool
     )
 
 
-def span_depths(spans: DataFrame, max_iter: int = 32,
-                method: str = "bfs") -> DataFrame:
+def span_depths(spans: DataFrame, max_iter: int = 32) -> DataFrame:
     """(trace_id, span_id_hex, depth): 0 for roots (null parent), else
     1 + parent's depth. Orphans (parent pointer to a missing span) are
-    absent from the output — callers decide their policy.
-
-    ``method="bfs"`` walks one tree LEVEL per round (O(depth) rounds —
-    right when per-round cost dominates, i.e. shallow real-world traces);
-    ``method="doubling"`` composes pointers (O(log depth) rounds — right
-    for deep chains, and fewer fixed-cost rounds even at depth ~10).
-    Identical output and identical cycle hard-fail either way
-    (parity-tested)."""
-    if method == "doubling":
-        roots, ptr = _doubling_ptrs(spans, max_iter, with_sum=False)
-        return roots.select(
+    absent from the output — callers decide their policy. Cyclic parent
+    pointers raise after ``max_iter`` doubling rounds."""
+    roots, ptr = _doubling_ptrs(spans, max_iter, with_sum=False)
+    return roots.select(
+        "trace_id", F.col("node").alias("span_id_hex"),
+        F.lit(0).cast("int").alias("depth"),
+    ).unionByName(
+        ptr.select(
             "trace_id", F.col("node").alias("span_id_hex"),
-            F.lit(0).cast("int").alias("depth"),
-        ).unionByName(
-            ptr.select(
-                "trace_id", F.col("node").alias("span_id_hex"),
-                F.col("d").alias("depth"),
-            )
+            F.col("d").alias("depth"),
         )
-    if method != "bfs":
-        raise ValueError(f"unknown method {method!r}")
-    edges = spans.where(F.col("parent_span_id").isNotNull()).select(
-        "trace_id",
-        F.col("parent_span_id").alias("parent_hex"),
-        F.col("span_id_hex").alias("child_hex"),
-    ).localCheckpoint()
-    frontier = spans.where(F.col("parent_span_id").isNull()).select(
-        "trace_id",
-        F.col("span_id_hex"),
-        F.lit(0).alias("depth"),
-    ).localCheckpoint()
-    out = frontier
-    for _ in range(max_iter):
-        nxt = (
-            edges.join(
-                frontier.select(
-                    "trace_id", F.col("span_id_hex").alias("parent_hex"), "depth"
-                ),
-                ["trace_id", "parent_hex"],
-            )
-            .select(
-                "trace_id",
-                F.col("child_hex").alias("span_id_hex"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            # Unreached spans whose parent EXISTS in the corpus are cycle
-            # members (orphans — missing parents — are the documented
-            # absent-by-policy case): returning silently would hide
-            # corrupt trees, so hard-fail like connected_components.
-            present_parents = spans.select(
-                "trace_id", F.col("span_id_hex").alias("parent_hex")
-            )
-            cyclic = (
-                edges.join(
-                    out.select(
-                        "trace_id", F.col("span_id_hex").alias("child_hex")
-                    ),
-                    ["trace_id", "child_hex"],
-                    "left_anti",
-                ).join(present_parents, ["trace_id", "parent_hex"], "left_semi")
-            )
-            if not cyclic.isEmpty():
-                raise RuntimeError(
-                    "span_depths: parent pointers cycle (spans unreachable "
-                    "from any root while their parents exist)"
-                )
-            return out
-        out = out.unionByName(nxt)
-        frontier = nxt
-    raise RuntimeError(
-        f"span_depths did not converge within {max_iter} levels "
-        "(trace depth exceeds the budget); raise max_iter after checking "
-        "for cycles"
     )
 
 
-def trace_rollup(spans: DataFrame, depths: DataFrame | None = None,
-                 method: str = "bfs") -> DataFrame:
+def trace_rollup(spans: DataFrame, depths: DataFrame | None = None) -> DataFrame:
     """Per-trace summary: span count, root name, trace wall duration
     (first start → last start+duration), error span count, max depth.
     One shuffle on trace_id; the root pick is an algebraic min_by."""
-    d = depths if depths is not None else span_depths(spans, method=method)
+    d = depths if depths is not None else span_depths(spans)
     enriched = spans.join(d, ["trace_id", "span_id_hex"], "left")
     end_ts = F.unix_micros(F.col("start_ts").cast("timestamp")) + (
         F.col("duration_ms") * 1000
@@ -325,87 +257,31 @@ def span_self_times(spans: DataFrame) -> DataFrame:
     )
 
 
-def critical_paths(spans: DataFrame, max_iter: int = 32,
-                   method: str = "bfs") -> DataFrame:
+def critical_paths(spans: DataFrame, max_iter: int = 32) -> DataFrame:
     """Per-trace critical path (self-time chain): the root-to-leaf chain
     with the largest cumulative span duration — where the trace's latency
-    actually lives. Same frontier BFS as ``span_depths`` but the frontier
-    carries the accumulated duration, so it costs the identical one-join-
-    per-level plan; per trace the answer is one max.
-    ``method="doubling"`` composes pointer sums instead (O(log depth)
-    rounds, identical output — parity-tested).
+    actually lives. The same pointer-doubling walk as ``span_depths``,
+    with each pointer also carrying its duration sum; per trace the
+    answer is one max.
 
     Returns (trace_id, critical_ms, critical_depth): the winning chain's
     total duration and its depth.
     """
-    if method == "doubling":
-        roots, ptr = _doubling_ptrs(spans, max_iter, with_sum=True)
-        # a finished pointer's s covers [node..root): add the root's own
-        # duration to get the full root-inclusive chain sum, the same
-        # quantity the BFS accumulates from its root-seeded frontier
-        fin = ptr.join(
-            roots.select("trace_id", F.col("node").alias("anc"), "root_ms"),
-            ["trace_id", "anc"],
-        ).select(
-            "trace_id",
-            (F.col("s") + F.col("root_ms")).alias("cum_ms"),
-            F.col("d").alias("depth"),
-        )
-        best = roots.select(
-            "trace_id", F.col("root_ms").alias("cum_ms"),
-            F.lit(0).alias("depth"),
-        ).unionByName(fin)
-        return (
-            best.groupBy("trace_id")
-            .agg(F.max(F.struct("cum_ms", "depth")).alias("_m"))
-            .select(
-                "trace_id",
-                F.col("_m.cum_ms").alias("critical_ms"),
-                F.col("_m.depth").alias("critical_depth"),
-            )
-        )
-    if method != "bfs":
-        raise ValueError(f"unknown method {method!r}")
-    edges = spans.where(F.col("parent_span_id").isNotNull()).select(
+    roots, ptr = _doubling_ptrs(spans, max_iter, with_sum=True)
+    # a finished pointer's s covers [node..root): add the root's own
+    # duration to get the full root-inclusive chain sum
+    fin = ptr.join(
+        roots.select("trace_id", F.col("node").alias("anc"), "root_ms"),
+        ["trace_id", "anc"],
+    ).select(
         "trace_id",
-        F.col("parent_span_id").alias("parent_hex"),
-        F.col("span_id_hex").alias("child_hex"),
-        F.col("duration_ms").alias("child_ms"),
-    ).localCheckpoint()
-    frontier = spans.where(F.col("parent_span_id").isNull()).select(
-        "trace_id",
-        F.col("span_id_hex"),
-        F.col("duration_ms").cast("long").alias("cum_ms"),
+        (F.col("s") + F.col("root_ms")).alias("cum_ms"),
+        F.col("d").alias("depth"),
+    )
+    best = roots.select(
+        "trace_id", F.col("root_ms").alias("cum_ms"),
         F.lit(0).alias("depth"),
-    ).localCheckpoint()
-    best = frontier.select("trace_id", "cum_ms", "depth")
-    for _ in range(max_iter):
-        nxt = (
-            edges.join(
-                frontier.select(
-                    "trace_id",
-                    F.col("span_id_hex").alias("parent_hex"),
-                    "cum_ms",
-                    "depth",
-                ),
-                ["trace_id", "parent_hex"],
-            )
-            .select(
-                "trace_id",
-                F.col("child_hex").alias("span_id_hex"),
-                (F.col("cum_ms") + F.col("child_ms")).alias("cum_ms"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        best = best.unionByName(nxt.select("trace_id", "cum_ms", "depth"))
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"critical_paths did not converge within {max_iter} levels"
-        )
+    ).unionByName(fin)
     return (
         best.groupBy("trace_id")
         .agg(F.max(F.struct("cum_ms", "depth")).alias("_m"))

@@ -1,4 +1,4 @@
-"""Sinks: table-format-aware writers, console/debug sink, retry policy.
+"""Sinks: table-format-aware writers, fan-out, retry policy, maintenance.
 
 Reference analogs:
 
@@ -7,7 +7,7 @@ Reference analogs:
   partition.rs:34): here ``write_table`` with partition columns, stable
   write ordering (sort-for-compression, optimizer.go:109), and a target
   file size expressed as a row-count hint per partition;
-* console exporter (exporters/console_exporter/mod.rs:1) → ``console_sink``;
+* noop / error exporters → ``noop_sink`` / ``error_sink``;
 * retry processor (processors/retry_processor/README.md:13-46) —
   exponential backoff with initial/max interval, multiplier, max elapsed →
   ``retry_with_backoff`` for driver-side actions (task-level retries are
@@ -62,9 +62,9 @@ def iceberg_write_plan(
     catalog: str, target: str, mode: str = "overwrite"
 ) -> dict:
     """Marshal an Iceberg v2 write into its invocation plan (the
-    contract-testable half, split from the jar-gated call exactly like
-    kafka_options/clickhouse_options): the fully-qualified table name and
-    the DataFrameWriterV2 method to invoke. Partition spec and write
+    contract-testable half, split from the jar-gated call): the
+    fully-qualified table name and the DataFrameWriterV2 method to
+    invoke. Partition spec and write
     ordering belong on the table DDL in Iceberg, not the writer — the
     writer's job is only name + mode.
     """
@@ -75,6 +75,22 @@ def iceberg_write_plan(
         "table": qualified,
         "method": "createOrReplace" if mode == "overwrite" else "append",
     }
+
+
+def _is_missing_package(ex: BaseException) -> bool:
+    """True only for classpath/data-source-resolution failures — the
+    Iceberg write rebrands ONLY those, never SQL/runtime errors."""
+    msg = str(ex)
+    return any(
+        marker in msg
+        for marker in (
+            "Failed to find data source",
+            "Failed to find the data source",
+            "ClassNotFoundException",
+            "NoClassDefFoundError",
+            "DATA_SOURCE_NOT_FOUND",
+        )
+    )
 
 
 def write_table(
@@ -147,11 +163,6 @@ def write_bucketed(
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table, format="parquet")
     return table
-
-
-def console_sink(df: DataFrame, n: int = 20, truncate: bool = True) -> None:
-    """Debug sink (console exporter analog)."""
-    df.show(n, truncate=truncate)
 
 
 def noop_sink(df: DataFrame) -> None:
@@ -309,162 +320,6 @@ def error_sink(df: DataFrame) -> None:
     """Always-fail terminal (error_exporter analog, exporters/
     error_exporter/mod.rs:1): for exercising retry/failover paths."""
     raise IOError("error_sink: configured to always fail")
-
-
-def debug_sink(
-    df: DataFrame,
-    fraction: float = 0.01,
-    n: int = 20,
-    predicate=None,
-    seed: int = 42,
-) -> int:
-    """Sampled, filtered pretty-print of passing rows (debug processor
-    analog, processors/debug_processor/{mod,predicate,sampling}.rs):
-    returns the number of rows that passed the predicate (pre-sampling)."""
-    base = df.filter(predicate) if predicate is not None else df
-    base.sample(fraction=fraction, seed=seed).show(n, truncate=False)
-    return base.count()
-
-
-def kafka_options(
-    bootstrap_servers: str,
-    topic: str,
-    *,
-    starting_offsets: str = "earliest",
-    fail_on_data_loss: bool = True,
-    extra: dict[str, str] | None = None,
-) -> dict[str, str]:
-    """Marshal Kafka connector options (contrib kafka receiver/exporter
-    config analog). Pure config wiring — testable without the package."""
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        "failOnDataLoss": str(fail_on_data_loss).lower(),
-    }
-    if extra:
-        opts.update(extra)
-    return opts
-
-
-def kafka_value_frame(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = (),
-    value_cols: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Shape rows into the (key, value) frame the Kafka sink requires:
-    value = JSON of the selected columns, key = '/'-joined key columns.
-    Pure DataFrame transform — the serialization contract is testable (and
-    tested) without any Kafka package; only the final format('kafka')
-    needs the jar."""
-    cols = list(value_cols) if value_cols is not None else list(df.columns)
-    value = F.to_json(F.struct(*[F.col(c) for c in cols])).alias("value")
-    if key_cols:
-        key = F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols]).alias("key")
-        return df.select(key, value)
-    return df.select(value)
-
-
-def kafka_stream_source(spark, bootstrap_servers: str, topic: str, **kw):
-    """Kafka ingest (contrib kafka receiver analog) — requires the
-    spark-sql-kafka package on the cluster; gated so environments without
-    it get a clear error instead of an opaque classpath failure."""
-    try:
-        return (
-            spark.readStream.format("kafka")
-            .options(**kafka_options(bootstrap_servers, topic, **kw))
-            .load()
-        )
-    except Exception as ex:  # noqa: BLE001
-        raise RuntimeError(
-            "kafka source requires the spark-sql-kafka-0-10 package "
-            "(--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>)"
-        ) from ex
-
-
-def kafka_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    key_cols: tuple[str, ...] = (),
-    value_cols: tuple[str, ...] | None = None,
-) -> None:
-    """Kafka exporter analog (batch write): marshals rows via
-    ``kafka_value_frame`` then writes with the Kafka connector. Gated like
-    the source."""
-    shaped = kafka_value_frame(df, key_cols, value_cols)
-    try:
-        (
-            shaped.write.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("topic", topic)
-            .save()
-        )
-    except Exception as ex:  # noqa: BLE001
-        if not _is_missing_package(ex):
-            raise  # broker/producer/runtime failures keep their real cause
-        raise RuntimeError(
-            "kafka sink requires the spark-sql-kafka-0-10 package "
-            "(--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>)"
-        ) from ex
-
-
-def _is_missing_package(ex: BaseException) -> bool:
-    """True only for classpath/data-source-resolution failures — the gated
-    helpers must rebrand ONLY those, never broker/SQL/runtime errors."""
-    msg = str(ex)
-    return any(
-        marker in msg
-        for marker in (
-            "Failed to find data source",
-            "Failed to find the data source",
-            "ClassNotFoundException",
-            "NoClassDefFoundError",
-            "DATA_SOURCE_NOT_FOUND",
-        )
-    )
-
-
-def clickhouse_options(
-    url: str,
-    table: str,
-    *,
-    user: str = "default",
-    password: str = "",
-    batch_size: int = 100_000,
-    extra: dict[str, str] | None = None,
-) -> dict[str, str]:
-    """Marshal ClickHouse JDBC options (contrib ClickHouse exporter config
-    analog): url/dbtable/driver/credentials/batchsize. Pure config wiring."""
-    opts = {
-        "url": url if url.startswith("jdbc:") else f"jdbc:clickhouse://{url}",
-        "dbtable": table,
-        "driver": "com.clickhouse.jdbc.ClickHouseDriver",
-        "user": user,
-        "password": password,
-        "batchsize": str(batch_size),
-        "isolationLevel": "NONE",  # ClickHouse has no transactions
-    }
-    if extra:
-        opts.update(extra)
-    return opts
-
-
-def clickhouse_sink(df: DataFrame, url: str, table: str, mode: str = "append", **kw) -> None:
-    """ClickHouse exporter analog over Spark's JDBC writer; gated so
-    environments without the ClickHouse JDBC driver jar get a clear error
-    instead of a ClassNotFoundException."""
-    try:
-        df.write.format("jdbc").options(**clickhouse_options(url, table, **kw)).mode(
-            mode
-        ).save()
-    except Exception as ex:  # noqa: BLE001
-        if not _is_missing_package(ex):
-            raise  # SQL/constraint/connectivity failures keep their real cause
-        raise RuntimeError(
-            "clickhouse sink requires the ClickHouse JDBC driver on the "
-            "classpath (--jars clickhouse-jdbc-<ver>-all.jar)"
-        ) from ex
 
 
 def compact_parquet_dir(

@@ -18,7 +18,7 @@ the analog of the reference's UnknownFormat handling (parser/mod.rs:41-43)
 and chaos-decoding tests (docs/validation_process.md:37-45).
 
 Skew: ``conv-00000000`` receives ~10% of all turns (FIXTURES.md §6) to
-exercise the salted-aggregation hot-key path.
+exercise the aggregate's hot-key path.
 
 Everything is vectorized numpy/pandas and fully deterministic (seed=42,
 fixed epoch, no wall-clock).

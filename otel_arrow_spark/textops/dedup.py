@@ -186,24 +186,6 @@ def token_ngram_hashes(text: Column, n: int = 8) -> Column:
     return pandas_udf("array<long>")(_grams)(th)
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """MinHash signature: for seed i, min over shingles of murmur3(s, i).
-
-    array of n_hashes ints; F.hash is Murmur3-x86-32 with the seed column
-    appended — the same hash family the reference binds for murmur3
-    (functions/murmur3.rs:1). All JVM-side.
-
-    Built as ONE nested transform over sequence(0, n-1) rather than n
-    separate array_min expressions: the unrolled form generates >64KB of
-    Java per method and kicks the whole stage out of codegen (janino
-    "Code grows beyond 64 KB"), silently falling back to interpreted mode.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.hash(s, i))),
-    )
-
-
 def minhash_signature_fast(shingle_hashes: Column, n_hashes: int = 64, seed: int = 42) -> Column:
     """Vectorized MinHash: numpy universal hashing over pre-hashed shingles.
 
@@ -211,10 +193,10 @@ def minhash_signature_fast(shingle_hashes: Column, n_hashes: int = 64, seed: int
     come from the multiply-shift family h_i(x) = a_i·x + b_i over Z/2^64
     (odd a_i; uint64 wraparound is the modulus), one numpy broadcast per
     row inside an Arrow-batched pandas UDF. Higher-order Spark expressions
-    don't participate in whole-stage codegen (interpreted eval), so the
-    pure-expression form (minhash_signature) costs ~3-10x this at 64
-    hashes — the same Arrow-barrier/vectorization trade as the parse UDF
-    (operators/parse.py).
+    don't participate in whole-stage codegen (interpreted eval), so a
+    pure-expression form (a nested ``F.transform`` of ``F.hash`` per
+    seed) costs ~3-10x this at 64 hashes — the same
+    Arrow-barrier/vectorization trade as the parse UDF (operators/parse.py).
     """
     import numpy as np
     import pandas as pd

@@ -5,9 +5,7 @@ once, rank per query). Scale path: random-hyperplane LSH buckets so each
 query probes only its bucket — the corpus-side signature is computed once
 and reused across queries.
 
-The dot products are pure JVM expressions (zip_with / aggregate); a
-vectorized pandas+numpy variant is provided for very high dimensions where
-per-element codegen expressions get long.
+The dot products are pure JVM expressions (zip_with / aggregate).
 """
 
 from __future__ import annotations
@@ -139,57 +137,4 @@ def lsh_bucketed_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id_col, id_col, "cosine", "rank")
-    )
-
-
-def brute_force_topk_pandas(
-    corpus: DataFrame,
-    queries_pdf,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Vectorized numpy variant: queries as a driver-side (q, dim) matrix
-    broadcast into a mapInPandas stage; each Arrow batch computes a
-    (batch × q) cosine matrix with one BLAS matmul, emits per-batch top-k;
-    a final per-query top-k merge reduces partial results.
-
-    Use when dim is large enough that per-element codegen expressions
-    (zip_with) dominate; the map side emits only k rows per (batch, query).
-    """
-    import numpy as np
-    import pandas as pd
-
-    qmat = np.asarray(list(queries_pdf[vec_col]), dtype=np.float64)
-    qids = list(queries_pdf["query_id"])
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-
-    def score_batches(it):
-        for pdf in it:
-            m = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cos = m @ qnorm.T  # (batch, q)
-            out = []
-            top = min(k, cos.shape[0])
-            for j, qid in enumerate(qids):
-                idx = np.argpartition(-cos[:, j], top - 1)[:top]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            id_col: pdf[id_col].to_numpy()[idx],
-                            "cosine": cos[idx, j],
-                        }
-                    )
-                )
-            yield pd.concat(out)
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        score_batches, schema=f"query_id long, {id_col} long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine", "rank")
     )

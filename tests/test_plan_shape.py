@@ -138,12 +138,12 @@ def test_skew_mitigation_hot_conversation_join(spark, tiny_transcripts):
        OptimizeSkewedJoin rule was probed and never fires in local-mode
        pyspark 4.1.2 even under forced extreme skew, so the engine does
        NOT rely on it);
-    2. the explicit mitigation the repo ships — salted two-phase
-       aggregation (operators/aggregate.py) and partition_with_salt — is
-       the primary mechanism, asserted equal to the unsalted oracle on
-       exactly this skewed key in test_pipeline.py. Here we pin that the
-       skewed join itself still returns exact results under a forced
-       sort-merge plan."""
+    2. for aggregates, Spark's partial + final hash aggregate is the
+       primary mechanism: a hot key leaves each map task as one partial
+       row, and test_pipeline.py checks the pipeline's aggregate on
+       exactly this skewed key against a DuckDB GROUP BY. Here we pin
+       that the skewed join itself still returns exact results under a
+       forced sort-merge plan."""
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

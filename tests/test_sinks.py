@@ -56,93 +56,6 @@ class TestRetry:
             )
 
 
-def test_kafka_source_gated_with_clear_error(spark):
-    """The contrib Kafka helper is gated: without the spark-sql-kafka
-    package it raises a RuntimeError naming the missing package instead of
-    an opaque classpath failure (contrib receiver surface)."""
-    import pytest as _pytest
-
-    from otel_arrow_spark.sinks import kafka_stream_source
-
-    with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        kafka_stream_source(spark, "localhost:9092", "t")
-
-
-class TestContribSinkContracts:
-    """Contract tests for the gated contrib connectors: everything up to
-    the external format call — option marshaling, row serialization — runs
-    and is verified in-sandbox; only format('kafka')/JDBC needs the jar."""
-
-    def test_kafka_option_marshaling(self):
-        from otel_arrow_spark.sinks import kafka_options
-
-        opts = kafka_options("h1:9092,h2:9092", "logs",
-                             starting_offsets="latest",
-                             extra={"maxOffsetsPerTrigger": "5000"})
-        assert opts == {
-            "kafka.bootstrap.servers": "h1:9092,h2:9092",
-            "subscribe": "logs",
-            "startingOffsets": "latest",
-            "failOnDataLoss": "true",
-            "maxOffsetsPerTrigger": "5000",
-        }
-
-    def test_kafka_value_frame_roundtrip(self, spark):
-        """The sink's (key, value) serialization contract: value JSON
-        round-trips through from_json losslessly; key joins key columns."""
-        from otel_arrow_spark.sinks import kafka_value_frame
-
-        df = spark.createDataFrame(
-            [("c1", 0, "hello"), ("c1", 1, "world"), ("c2", 0, "x")],
-            "conv_id string, turn_idx int, text string",
-        )
-        shaped = kafka_value_frame(df, key_cols=("conv_id", "turn_idx"))
-        assert shaped.columns == ["key", "value"]
-        back = shaped.select(
-            F.from_json("value", df.schema).alias("r")
-        ).select("r.*")
-        assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
-        keys = {r.key for r in shaped.collect()}
-        assert keys == {"c1/0", "c1/1", "c2/0"}
-        # value-only form and column subset
-        sub = kafka_value_frame(df, value_cols=("conv_id",))
-        assert sub.columns == ["value"]
-        assert {r.value for r in sub.collect()} == {
-            '{"conv_id":"c1"}', '{"conv_id":"c2"}'
-        }
-
-    def test_kafka_sink_gated_with_clear_error(self, spark):
-        import pytest as _pytest
-
-        from otel_arrow_spark.sinks import kafka_sink
-
-        df = spark.createDataFrame([("a",)], "text string")
-        with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
-            kafka_sink(df, "localhost:9092", "t")
-
-    def test_clickhouse_option_marshaling(self):
-        from otel_arrow_spark.sinks import clickhouse_options
-
-        opts = clickhouse_options("ch-host:8123/telemetry", "routed",
-                                  user="writer", batch_size=50_000)
-        assert opts["url"] == "jdbc:clickhouse://ch-host:8123/telemetry"
-        assert opts["dbtable"] == "routed"
-        assert opts["driver"] == "com.clickhouse.jdbc.ClickHouseDriver"
-        assert opts["batchsize"] == "50000"
-        assert opts["isolationLevel"] == "NONE"
-        # pre-formed jdbc urls pass through untouched
-        assert clickhouse_options("jdbc:clickhouse://x", "t")["url"] == "jdbc:clickhouse://x"
-
-    def test_clickhouse_sink_gated_with_clear_error(self, spark):
-        import pytest as _pytest
-
-        from otel_arrow_spark.sinks import clickhouse_sink
-
-        df = spark.createDataFrame([("a",)], "text string")
-        with _pytest.raises(RuntimeError, match="ClickHouse JDBC"):
-            clickhouse_sink(df, "localhost:8123/db", "t")
-
-
 def test_write_table_zstd_roundtrip(spark, tiny_transcripts, workdir):
     """write_table writes zstd parquet that reads back whole and is
     smaller than Spark's default parquet of the same frame."""
@@ -319,8 +232,7 @@ class TestFanoutPolicy:
 
 
 class TestIcebergGating:
-    """Iceberg option wiring, contract-tested without the jar (the
-    kafka/clickhouse gated-sink pattern applied to the table format)."""
+    """Iceberg option wiring, contract-tested without the jar."""
 
     def test_write_plan_marshaling(self):
         from otel_arrow_spark.sinks import iceberg_write_plan

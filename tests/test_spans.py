@@ -231,32 +231,10 @@ class TestTraceTree:
         with pytest.raises(RuntimeError, match="cycle|converge"):
             span_depths(cyc, max_iter=4)
 
-    def test_doubling_matches_bfs(self, spark, workdir):
-        """Pointer doubling == frontier BFS on the real fixture, for both
-        depths and critical paths (identical rows, identical schema)."""
-        from otel_arrow_spark.operators.trace_tree import (
-            critical_paths,
-            span_depths,
-        )
-
-        p = write_spans_parquet(f"{workdir}/spans_fixture", 2000)
-        spans = spark.read.parquet(f"{p}/spans.parquet")
-        bfs = span_depths(spans).localCheckpoint()
-        dbl = span_depths(spans, method="doubling").select(*bfs.columns)
-        assert bfs.schema == dbl.schema
-        assert bfs.exceptAll(dbl).count() == 0
-        assert dbl.exceptAll(bfs).count() == 0
-
-        cb = critical_paths(spans).localCheckpoint()
-        cd = critical_paths(spans, method="doubling").select(*cb.columns)
-        assert cb.schema == cd.schema
-        assert cb.exceptAll(cd).count() == 0
-        assert cd.exceptAll(cb).count() == 0
-
     def test_doubling_deep_chain_and_cycle(self, spark):
         """A depth-300 chain converges in ≤12 doubling rounds (2^12 ≫
-        300) where the BFS budget of 300 levels would be needed; orphan
-        chains drop; cycles still hard-fail."""
+        300) where a level-by-level walk would need 300; orphan chains
+        drop; cycles hard-fail."""
         import pytest as _pytest
 
         from otel_arrow_spark.operators.trace_tree import (
@@ -274,10 +252,10 @@ class TestTraceTree:
             "duration_ms long",
         )
         got = {r.span_id_hex: r.depth
-               for r in span_depths(df, max_iter=12, method="doubling").collect()}
+               for r in span_depths(df, max_iter=12).collect()}
         assert got[f"s{depth}"] == depth and got["s0"] == 0
         assert "orphan" not in got and len(got) == depth + 1
-        cp = critical_paths(df, max_iter=12, method="doubling").collect()
+        cp = critical_paths(df, max_iter=12).collect()
         assert len(cp) == 1
         # chain sum: root 5 + 300 × 1; the winning leaf sits at depth 300
         assert (cp[0].critical_ms, cp[0].critical_depth) == (depth + 5, depth)
@@ -287,7 +265,7 @@ class TestTraceTree:
             "trace_id string, span_id_hex string, parent_span_id string",
         )
         with _pytest.raises(RuntimeError, match="cycle"):
-            span_depths(cyc, max_iter=4, method="doubling")
+            span_depths(cyc, max_iter=4)
 
 
 def test_service_graph_matches_duckdb(spark, workdir):

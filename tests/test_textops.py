@@ -21,7 +21,6 @@ from otel_arrow_spark.textops.dedup import (
 )
 from otel_arrow_spark.textops.similarity import (
     brute_force_topk,
-    brute_force_topk_pandas,
     lsh_bucketed_topk,
 )
 
@@ -294,18 +293,6 @@ class TestSimilarity:
             """
         ).fetchall()
         assert rows == {(q, r): v for q, r, v in oracle}
-
-    def test_pandas_variant_matches_native(self, spark, embeddings):
-        queries = (
-            embeddings.orderBy("vec_id").limit(2)
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        )
-        native = brute_force_topk(embeddings, queries, k=5)
-        pdf = queries.toPandas()
-        fast = brute_force_topk_pandas(embeddings, pdf, k=5)
-        a = {(r.query_id, r.rank): r.vec_id for r in native.collect()}
-        b = {(r.query_id, r.rank): r.vec_id for r in fast.collect()}
-        assert a == b
 
     def test_lsh_recall_reasonable(self, spark, embeddings):
         queries = (

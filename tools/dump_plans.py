@@ -478,6 +478,112 @@ def main() -> None:
         )
     )
 
+    from otel_arrow_spark.operators.funnel import funnel_progress
+
+    sections.append(
+        (
+            "Ordered-conversion funnel (one-shuffle state machine)",
+            "Expected: the step-type `IN` filter PUSHED to the parquet scan "
+            "(non-step events never leave the file reader), ONE `Exchange` "
+            "on the funnel keys with partial+final `collect_list` around it "
+            "(map-side combine bounds the shuffle at the per-key step-event "
+            "structs), and the whole state machine — sort, fold, "
+            "strictly-after advance — evaluated INSIDE the final aggregate's "
+            "result expression as a `lambdafunction`: no second pass, no "
+            "join, no Python. The k-step self-join formulation this replaces "
+            "would be k−1 shuffles of the full fact table.",
+            funnel_progress(
+                events,
+                ["view", "click", "purchase"],
+                ["user_id", F.to_date("ts").alias("day")],
+                tiebreak="event_id",
+            ),
+        )
+    )
+
+    from otel_arrow_spark.operators.anomaly import ewma_smooth
+
+    sections.append(
+        (
+            "EWMA smoothing (one window stage, higher-order fold)",
+            "Expected: ONE `Exchange` on the series key feeding ONE `Sort`, "
+            "then TWO `Window` nodes over the IDENTICAL "
+            "partitioning+ordering — Spark reuses the sort (no second "
+            "Exchange appears): `row_number` first, then the trailing "
+            "64-row `collect_list` frame. The weighted fold and the "
+            "closed-form denominator are a single `aggregate(...)` lambda in "
+            "the final Project — whole plan JVM-side, no self-join (the "
+            "DuckDB oracle's rn-range join is the *replay* formulation, "
+            "not the execution plan).",
+            ewma_smooth(
+                events, ("event_type",), alpha=0.5, lookback=64,
+                tiebreak=("event_id",),
+            ),
+        )
+    )
+
+    from otel_arrow_spark.textops.paragraphs import (
+        boilerplate_remove,
+        write_paragraph_corpus,
+    )
+
+    paras = spark.read.parquet(
+        write_paragraph_corpus(os.path.join(repo, ".cache", "paragraphs", "n2000"), 2000)
+    )
+    sections.append(
+        (
+            "Boilerplate removal (DF filter, broadcast anti-join)",
+            "Expected: the document-frequency count is a partial+final "
+            "`HashAggregate` pair on phash (a second pair inside for the "
+            "DISTINCT expansion) — never a window, so a billion-copy banner "
+            "reduces map-side. The boilerplate set (high-DF Zipf tail, "
+            "tiny) feeds the `LeftAnti` join as a `BroadcastExchange`; the "
+            "per-doc restitch is one partial+final `ObjectHashAggregate` "
+            "(collect_list) on doc_id. At sandbox scale AQE also broadcasts "
+            "the final totals⋈kept outer join; at 100 TB that one becomes "
+            "a co-partitioned shuffle join on doc_id — both sides already "
+            "hash on it.",
+            boilerplate_remove(paras, min_df=5),
+        )
+    )
+
+    from otel_arrow_spark.operators.trace_tree import pagerank, service_graph
+
+    # pagerank returns its checkpointed ranks, whose plan is a bare scan;
+    # the section shows the last round it checkpoints instead
+    rounds: list = []
+    frame_cls = type(spans)
+    checkpoint = frame_cls.localCheckpoint
+
+    def _keep_round(df, *args, **kwargs):
+        rounds.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    frame_cls.localCheckpoint = _keep_round
+    try:
+        pagerank(
+            service_graph(spans, svc).select("client", "server", "n_calls"),
+            iterations=8, damping=0.85,
+        )
+    finally:
+        frame_cls.localCheckpoint = checkpoint
+    sections.append(
+        (
+            "PageRank (per-round plan over checkpointed ranks)",
+            "Expected: each of the fixed iterations is ONE equi-join "
+            "(checkpointed ranks ⋈ normalized out-edges) feeding ONE "
+            "partial+final `HashAggregate` on the destination, then a left "
+            "join back to the node list; every input is a `Scan "
+            "ExistingRDD` (localCheckpoint), so the plan never deepens with "
+            "the round count — the connected-components discipline. The "
+            "dangling-mass term is a separate 1-row aggregate per round "
+            "(bounded driver action). Edge/node tables here are AGGREGATED "
+            "(service_graph output), so at any scale the per-round shuffle "
+            "is the edge list, never raw spans.",
+            rounds[-1],
+        )
+    )
+
     out = [HEADER]
     for title, expect, df in sections:
         plan = df._jdf.queryExecution().explainString(
