@@ -2415,109 +2415,58 @@ def q_scope_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _otlp_corpus_path(n: int) -> str:
-    """Write the deterministic OTLP/JSON request corpus as parquet once so
-    the DuckDB oracle decodes the exact same payload bytes."""
-    from otel_arrow_spark.sources.otlp_json import generate_otlp_json_requests
+def _otlp_corpus_path(signal: str, n: int) -> str:
+    """Write the deterministic OTLP/JSON request corpus of ``signal`` as
+    parquet once so the DuckDB oracle decodes the exact same payload bytes
+    (the oracle SQL reads these file names)."""
+    from otel_arrow_spark.sources import otlp_json
 
-    path = os.path.join(_REPO, ".cache", "otlp", f"n{n}.parquet")
+    prefix, generate = {
+        "logs": ("n", otlp_json.generate_otlp_json_requests),
+        "traces": ("traces_n", otlp_json.generate_otlp_json_trace_requests),
+        "metrics": ("metrics_n", otlp_json.generate_otlp_json_metric_requests),
+    }[signal]
+    path = os.path.join(_REPO, ".cache", "otlp", f"{prefix}{n}.parquet")
     if not os.path.exists(path):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        reqs = generate_otlp_json_requests(n)
+        reqs = generate(n)
         pq.write_table(
             pa.table({"req_no": list(range(len(reqs))), "payload": reqs}), path
         )
     return path
 
 
-def q_otlp_logs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP/JSON ExportLogsServiceRequest decode → one flat row per
-    LogRecord (views/otlp/proto/logs.rs:154-220 field-for-field; the
-    protocol's public JSON encoding). from_json + 3 explodes, all
-    codegen; the oracle re-decodes the same payloads with DuckDB
-    json_transform, so every field survives both engines byte-equal —
-    the OTLP-ingest analog of the reference's decode round-trip tests."""
-    from otel_arrow_spark.sources.otlp_json import parse_otlp_json
-
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_corpus_path(n)))
-    return parse_otlp_json(payloads).select(
-        "service_name", "environment", "scope_name", "scope_version",
-        "time_unix_nano", "severity_number", "severity_text", "body",
-        "trace_id", "span_id", "dropped_attributes_count", "event_index",
-    )
+def _otlp_n(sf_dir: str) -> int:
+    """Items per OTLP corpus at a testdata scale factor."""
+    if "sf0.001" in sf_dir:
+        return 2000
+    if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1"):
+        return 200_000
+    return 20_000
 
 
-def _otlp_traces_corpus_path(n: int) -> str:
-    from otel_arrow_spark.sources.otlp_json import (
-        generate_otlp_json_trace_requests,
-    )
-
-    path = os.path.join(_REPO, ".cache", "otlp", f"traces_n{n}.parquet")
-    if not os.path.exists(path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        reqs = generate_otlp_json_trace_requests(n)
-        pq.write_table(
-            pa.table({"req_no": list(range(len(reqs))), "payload": reqs}), path
-        )
-    return path
+def _otlp_payloads(spark: SparkSession, signal: str, sf_dir: str) -> DataFrame:
+    return _par(spark.read.parquet(_otlp_corpus_path(signal, _otlp_n(sf_dir))))
 
 
-def q_otlp_traces_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP/JSON ExportTraceServiceRequest decode → one flat row per span
-    (views/otlp/proto/trace.rs:203 field set; proto3 JSON mapping) — the
-    traces twin of otlp_logs_ingest: NULL parentSpanId marks roots,
-    status.code defaults to 0 when omitted, duration derived from the
-    nano timestamps. Same scan-side zero-shuffle plan."""
-    from otel_arrow_spark.sources.otlp_json import parse_otlp_traces_json
-
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_traces_corpus_path(n)))
-    return parse_otlp_traces_json(payloads).select(
-        "service_name", "scope_name", "scope_version", "trace_id",
-        "span_id", "parent_span_id", "name", "kind", "start_unix_nano",
-        "end_unix_nano", "duration_ns", "status_code", "status_message",
-        "peer_service", "span_seq",
-    )
+_OTLP_LOG_COLS = (
+    "service_name", "environment", "scope_name", "scope_version",
+    "time_unix_nano", "severity_number", "severity_text", "body",
+    "trace_id", "span_id", "dropped_attributes_count", "event_index",
+)
+_OTLP_SPAN_COLS = (
+    "service_name", "scope_name", "scope_version", "trace_id",
+    "span_id", "parent_span_id", "name", "kind", "start_unix_nano",
+    "end_unix_nano", "duration_ns", "status_code", "status_message",
+    "peer_service", "span_seq",
+)
 
 
-def _otlp_metrics_corpus_path(n: int) -> str:
-    from otel_arrow_spark.sources.otlp_json import (
-        generate_otlp_json_metric_requests,
-    )
-
-    path = os.path.join(_REPO, ".cache", "otlp", f"metrics_n{n}.parquet")
-    if not os.path.exists(path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        reqs = generate_otlp_json_metric_requests(n)
-        pq.write_table(
-            pa.table({"req_no": list(range(len(reqs))), "payload": reqs}), path
-        )
-    return path
-
-
-def q_otlp_metrics_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP/JSON ExportMetricsServiceRequest decode → one flat row per
-    data point across the Metric oneof's gauge / sum / histogram branches
-    (views/otlp/proto/metrics.rs:10-110 view field sets; OTLP/JSON:
-    uint64 as strings, enums as integers). The oneof is normalized
-    scan-side — per-branch `transform` into one common point struct,
-    `concat`, single `explode` — so the whole decode is still from_json +
-    4 Generates with zero shuffle; the oracle re-decodes the same bytes
-    as a 3-branch UNION ALL."""
-    from otel_arrow_spark.sources.otlp_json import parse_otlp_metrics_json
-
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_metrics_corpus_path(n)))
+def _otlp_metric_cols() -> list:
+    """The compared metrics columns; arrays as comma-joined strings."""
     # the summary quantile snapshot compares as integer-encoded pairs
     # (pct = quantile*100, millis = round(value*1000)) so double→string
     # formatting can never diverge between engines
@@ -2532,7 +2481,7 @@ def q_otlp_metrics_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ",",
     )
-    return parse_otlp_metrics_json(payloads).select(
+    return [
         "service_name", "scope_name", "scope_version", "metric_name",
         "metric_unit", "metric_type", "temporality", "is_monotonic",
         "time_unix_nano", "value", "count", "sum_value",
@@ -2542,7 +2491,47 @@ def q_otlp_metrics_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join("pos_bucket_counts", ",").alias("pos_bucket_counts_str"),
         q_str.alias("quantiles_str"),
         "host_name", "point_seq",
-    )
+    ]
+
+
+def q_otlp_logs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OTLP/JSON ExportLogsServiceRequest decode → one flat row per
+    LogRecord (views/otlp/proto/logs.rs:154-220 field-for-field; the
+    protocol's public JSON encoding). from_json + 3 explodes, all
+    codegen; the oracle re-decodes the same payloads with DuckDB
+    json_transform, so every field survives both engines byte-equal —
+    the OTLP-ingest analog of the reference's decode round-trip tests."""
+    from otel_arrow_spark.sources.otlp_json import parse_otlp_json
+
+    payloads = _otlp_payloads(spark, "logs", sf_dir)
+    return parse_otlp_json(payloads).select(*_OTLP_LOG_COLS)
+
+
+def q_otlp_traces_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OTLP/JSON ExportTraceServiceRequest decode → one flat row per span
+    (views/otlp/proto/trace.rs:203 field set; proto3 JSON mapping) — the
+    traces twin of otlp_logs_ingest: NULL parentSpanId marks roots,
+    status.code defaults to 0 when omitted, duration derived from the
+    nano timestamps. Same scan-side zero-shuffle plan."""
+    from otel_arrow_spark.sources.otlp_json import parse_otlp_traces_json
+
+    payloads = _otlp_payloads(spark, "traces", sf_dir)
+    return parse_otlp_traces_json(payloads).select(*_OTLP_SPAN_COLS)
+
+
+def q_otlp_metrics_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OTLP/JSON ExportMetricsServiceRequest decode → one flat row per
+    data point across the Metric oneof's gauge / sum / histogram branches
+    (views/otlp/proto/metrics.rs:10-110 view field sets; OTLP/JSON:
+    uint64 as strings, enums as integers). The oneof is normalized
+    scan-side — per-branch `transform` into one common point struct,
+    `concat`, single `explode` — so the whole decode is still from_json +
+    4 Generates with zero shuffle; the oracle re-decodes the same bytes
+    as a 3-branch UNION ALL."""
+    from otel_arrow_spark.sources.otlp_json import parse_otlp_metrics_json
+
+    payloads = _otlp_payloads(spark, "metrics", sf_dir)
+    return parse_otlp_metrics_json(payloads).select(*_otlp_metric_cols())
 
 
 def q_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2805,14 +2794,9 @@ def q_otlp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_otlp_json,
     )
 
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_corpus_path(n)))
+    payloads = _otlp_payloads(spark, "logs", sf_dir)
     rt = parse_otlp_json(encode_otlp_json(parse_otlp_json(payloads)))
-    return rt.select(
-        "service_name", "environment", "scope_name", "scope_version",
-        "time_unix_nano", "severity_number", "severity_text", "body",
-        "trace_id", "span_id", "dropped_attributes_count", "event_index",
-    )
+    return rt.select(*_OTLP_LOG_COLS)
 
 
 def q_otlp_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2827,17 +2811,11 @@ def q_otlp_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_otlp_traces_json,
     )
 
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_traces_corpus_path(n)))
+    payloads = _otlp_payloads(spark, "traces", sf_dir)
     rt = parse_otlp_traces_json(
         encode_otlp_traces_json(parse_otlp_traces_json(payloads))
     )
-    return rt.select(
-        "service_name", "scope_name", "scope_version", "trace_id",
-        "span_id", "parent_span_id", "name", "kind", "start_unix_nano",
-        "end_unix_nano", "duration_ns", "status_code", "status_message",
-        "peer_service", "span_seq",
-    )
+    return rt.select(*_OTLP_SPAN_COLS)
 
 
 def q_otlp_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2852,33 +2830,11 @@ def q_otlp_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_otlp_metrics_json,
     )
 
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_metrics_corpus_path(n)))
+    payloads = _otlp_payloads(spark, "metrics", sf_dir)
     rt = parse_otlp_metrics_json(
         encode_otlp_metrics_json(parse_otlp_metrics_json(payloads))
     )
-    q_str = F.array_join(
-        F.transform(
-            F.col("quantiles"),
-            lambda s: F.concat_ws(
-                "=",
-                (s["quantile"] * 100).cast("int").cast("string"),
-                F.round(s["value"] * 1000).cast("long").cast("string"),
-            ),
-        ),
-        ",",
-    )
-    return rt.select(
-        "service_name", "scope_name", "scope_version", "metric_name",
-        "metric_unit", "metric_type", "temporality", "is_monotonic",
-        "time_unix_nano", "value", "count", "sum_value",
-        F.array_join("bucket_counts", ",").alias("bucket_counts_str"),
-        F.array_join("explicit_bounds", ",").alias("explicit_bounds_str"),
-        "scale", "zero_count", "pos_offset",
-        F.array_join("pos_bucket_counts", ",").alias("pos_bucket_counts_str"),
-        q_str.alias("quantiles_str"),
-        "host_name", "point_seq",
-    )
+    return rt.select(*_otlp_metric_cols())
 
 
 def q_otlp_hist_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2897,15 +2853,14 @@ def q_otlp_hist_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from otel_arrow_spark.sources.otlp_json import parse_otlp_metrics_json
 
-    n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
     # histogram-branch-restricted decode: from_json skips the other four
     # oneof subtrees (guide §6 pruning-to-the-scan; ~3x on the decode).
     # Equivalent by construction — the query filters to
-    # metric_type == "histogram" anyway (branch-parity pinned in
-    # tests/test_otlp_json.py)
+    # metric_type == "histogram" anyway (branch parity pinned by
+    # tests/test_logpatterns.py::TestOtlpMetricsJson, the histogram-only
+    # read schema by tests/test_otlp_json.py)
     pts = parse_otlp_metrics_json(
-        _par(spark.read.parquet(_otlp_metrics_corpus_path(n))),
-        branches=("histogram",),
+        _otlp_payloads(spark, "metrics", sf_dir), branches=("histogram",)
     )
     hist = pts.where(
         (F.col("metric_type") == "histogram") & (F.col("temporality") == 1)

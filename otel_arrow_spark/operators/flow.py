@@ -5,7 +5,8 @@ Reference analogs:
 * OPL ``if / else if / else`` — rows partitioned by first-match predicate,
   each branch runs its own pipeline, outputs unioned with unspecified
   order (flow_control.md:6-114; query-engine/src/pipeline/conditional.rs:39)
-* fork — duplicate batch into N nested pipelines (pipeline/fork.rs:31)
+* fork (``forked``) — duplicate batch into N nested pipelines
+  (pipeline/fork.rs:31)
 * batch split/concatenate — size-bounded batch shaping
   (pdata/src/otap/transform/{split.rs:57, concatenate.rs:78})
 """
@@ -47,23 +48,13 @@ def conditional_branches(
     return out
 
 
-def fork(df: DataFrame, fns: list[BranchFn]) -> list[DataFrame]:
-    """Duplicate one input into N nested pipelines (fork.rs:31).
-
-    The input is persisted so the upstream plan executes once; callers
-    unpersist after consuming all outputs (the fanout processor does the
-    same clone-to-N, fanout_processor/mod.rs:1). Prefer ``forked`` — the
-    context-manager form that owns the unpersist.
-    """
-    df.persist()
-    return [fn(df) for fn in fns]
-
-
 @contextmanager
 def forked(df: DataFrame, fns: list[BranchFn]) -> Iterator[list[DataFrame]]:
-    """``fork`` without the caller-must-unpersist footgun: the shared
-    input is persisted on entry and unpersisted on exit, so consume (or
-    wire up) every branch inside the ``with`` block::
+    """Duplicate one input into N nested pipelines (fork.rs:31; the
+    fanout processor's clone-to-N, fanout_processor/mod.rs:1). The shared
+    input is persisted on entry, so its plan executes once, and
+    unpersisted on exit, so consume (or wire up) every branch inside the
+    ``with`` block::
 
         with forked(base, [a_fn, b_fn]) as (a, b):
             a.write...; b.write...

@@ -1,36 +1,48 @@
-"""OTLP/JSON logs ingestion: ExportLogsServiceRequest payloads → flat rows.
+"""OTLP/JSON codec for logs, traces and metrics: ExportLogs/Trace/Metrics
+ServiceRequest payloads ⇄ flat rows, plus deterministic request corpora.
 
 The reference's entire input side is OTLP — its receivers decode
-ResourceLogs / ScopeLogs / LogRecord batches into columns
-(rust/otap-dataflow/crates/pdata/src/views/otlp/proto/logs.rs:154-220:
-time_unix_nano, severity_number, severity_text, body, attributes,
-dropped_attributes_count, trace_id, span_id; go/pkg/otel/logs/otlp/logs.go
-is the Arrow→OTLP inverse). This module is the Spark-native equivalent for
+resource → scope → item batches into columns
+(rust/otap-dataflow/crates/pdata/src/views/otlp/proto/logs.rs:154-220,
+trace.rs:203, metrics.rs:10-110), and go/pkg/otel/{logs,traces,metrics}/otlp
+is the Arrow→OTLP inverse. This module is the Spark-native equivalent for
 the protocol's public JSON encoding (OTLP/JSON, the collector's HTTP
-encoding): one `from_json` with a typed schema plus three `explode`s —
-pure JVM expression work inside whole-stage codegen, zero Python on the
-hot path. The nested-batch → flat-rows unnest is exactly the reference's
-"row-oriented OTLP → columnar" step, with Catalyst doing the decoding.
+encoding), in both directions:
 
-Proto3 JSON mapping notes baked into the schema (public protobuf spec):
+* decode: one `from_json` with a typed schema plus one `explode` per
+  nesting level — pure JVM expression work inside whole-stage codegen,
+  zero Python, zero shuffle;
+* encode: rows → `collect_list` per (resource, scope, hash bucket) →
+  `to_json`, the exporter's batching shuffle and nothing else.
+
+Resource and scope are one layer shared by every signal, as in the
+reference: `_ENVELOPE` names each signal's `resourceX → scopeX → items`
+keys, and the read schema, the decode, the encode and the generators
+all build that envelope through it. The five-branch Metric `data` oneof
+is likewise one table, `_BRANCHES`, over one data-point field table,
+`_POINT_FIELDS`.
+
+Proto3 JSON mapping notes baked into the schemas (public protobuf spec):
 * field names are lowerCamelCase (`resourceLogs`, `timeUnixNano`);
-* int64/uint64 (`timeUnixNano`, AnyValue `intValue`) arrive as JSON
-  *strings* — declared STRING here and cast to BIGINT after parse;
-* absent fields (empty trace/span ids, zero dropped counts) are omitted
-  from the wire entirely and surface as NULL.
+* int64/uint64 (`timeUnixNano`, AnyValue `intValue`, `count`, …) arrive
+  as JSON *strings* — declared STRING here and cast to BIGINT after parse;
+* absent fields (empty trace/span ids, zero dropped counts, unused oneof
+  branches) are omitted from the wire entirely and surface as NULL; the
+  encoders omit them again because `to_json` drops NULL fields.
 
 Generation is the same deterministic-corpus pattern as sources/syslog.py:
-a seeded numpy/pandas builder whose parquet output both the Spark path and
-the DuckDB oracle read, so cross-engine comparison sees identical bytes.
+a seeded numpy builder whose parquet output both the Spark path and the
+DuckDB oracle read, so cross-engine comparison sees identical bytes.
 """
 
 from __future__ import annotations
 
 import json
+from typing import Callable, NamedTuple
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,6 +58,33 @@ BODY_WORDS = (
 # epoch 2026-01-01T00:00:00Z in nanoseconds
 _EPOCH_NANOS = 1_767_225_600_000_000_000
 
+# The column every decoder reads the request bodies from and every encoder
+# writes them to.
+PAYLOAD_COL = "payload"
+# Hash buckets per (resource, scope) in the encoders: bounds request size.
+ENCODE_BUCKETS = 64
+# Log attribute keys whose AnyValue is the int64 branch (the rest are strings).
+LOG_INT_ATTR_KEYS = ("event.index",)
+
+# signal → (resource list key, scope list key, item list key)
+_ENVELOPE = {
+    "logs": ("resourceLogs", "scopeLogs", "logRecords"),
+    "traces": ("resourceSpans", "scopeSpans", "spans"),
+    "metrics": ("resourceMetrics", "scopeMetrics", "metrics"),
+}
+# signal → the resource attributes carried as flat columns: (key, column)
+_RESOURCE_ATTRS = {
+    "logs": (
+        ("service.name", "service_name"),
+        ("deployment.environment", "environment"),
+    ),
+    "traces": (("service.name", "service_name"),),
+    "metrics": (("service.name", "service_name"),),
+}
+
+
+# --- generate -----------------------------------------------------------------
+
 
 def _kv_str(key: str, val: str) -> dict:
     return {"key": key, "value": {"stringValue": val}}
@@ -56,19 +95,42 @@ def _kv_int(key: str, val: int) -> dict:
     return {"key": key, "value": {"intValue": str(val)}}
 
 
+def _request(signal: str, resource_attrs: list, scopes: list) -> str:
+    """One Export*ServiceRequest with a single resource; ``scopes`` is a
+    list of ((name, version), items)."""
+    res_key, scope_key, items_key = _ENVELOPE[signal]
+    req = {
+        res_key: [
+            {
+                "resource": {"attributes": resource_attrs},
+                scope_key: [
+                    {"scope": {"name": name, "version": ver}, items_key: items}
+                    for (name, ver), items in scopes
+                ],
+            }
+        ]
+    }
+    return json.dumps(req, separators=(",", ":"))
+
+
+def _batch_sizes(rng: np.random.RandomState, n: int, lo: int, hi: int) -> list[int]:
+    """Request sizes drawn from [lo, hi) that total exactly ``n``."""
+    sizes: list[int] = []
+    left = n
+    while left > 0:
+        s = min(int(rng.randint(lo, hi)), left)
+        sizes.append(s)
+        left -= s
+    return sizes
+
+
 def generate_otlp_json_requests(n_records: int, seed: int = 42) -> list[str]:
     """Deterministic ExportLogsServiceRequest JSON payloads totalling
     exactly ``n_records`` LogRecords, batched 4-24 records per request
     (the reference's traffic_generator produces the same shape on the
     wire, core-nodes/src/receivers/traffic_generator/producer.rs)."""
     rng = np.random.RandomState(seed)
-
-    sizes: list[int] = []
-    left = n_records
-    while left > 0:
-        s = int(rng.randint(4, 25))
-        sizes.append(min(s, left))
-        left -= min(s, left)
+    sizes = _batch_sizes(rng, n_records, 4, 25)
 
     n = n_records
     svc = rng.randint(0, len(SERVICES), size=len(sizes))
@@ -115,207 +177,18 @@ def generate_otlp_json_requests(n_records: int, seed: int = 42) -> list[str]:
         # split each request's records across 1-2 scopes deterministically
         n_scopes = 1 + (req_i % 2)
         cut = len(records) // 2 if n_scopes == 2 else len(records)
-        scope_logs = []
-        for s_i, chunk in enumerate([records[:cut], records[cut:]][:n_scopes]):
-            if not chunk:
-                continue
-            name, ver = SCOPES[(scope_pick[rec_i - 1] + s_i) % len(SCOPES)]
-            scope_logs.append(
-                {"scope": {"name": name, "version": ver}, "logRecords": chunk}
-            )
-        req = {
-            "resourceLogs": [
-                {
-                    "resource": {
-                        "attributes": [
-                            _kv_str("service.name", SERVICES[svc[req_i]]),
-                            _kv_str(
-                                "deployment.environment",
-                                ENVIRONMENTS[env[req_i]],
-                            ),
-                        ]
-                    },
-                    "scopeLogs": scope_logs,
-                }
-            ]
-        }
-        out.append(json.dumps(req, separators=(",", ":")))
+        scopes = [
+            (SCOPES[(scope_pick[rec_i - 1] + s_i) % len(SCOPES)], chunk)
+            for s_i, chunk in enumerate([records[:cut], records[cut:]][:n_scopes])
+            if chunk
+        ]
+        resource = [
+            _kv_str("service.name", SERVICES[svc[req_i]]),
+            _kv_str("deployment.environment", ENVIRONMENTS[env[req_i]]),
+        ]
+        out.append(_request("logs", resource, scopes))
     return out
 
-
-def _anyvalue_struct() -> T.StructType:
-    # the AnyValue oneof's sparse-union analog: one nullable field per
-    # branch actually used by the corpus (from_json leaves absent ones NULL)
-    return T.StructType(
-        [
-            T.StructField("stringValue", T.StringType()),
-            T.StructField("intValue", T.StringType()),  # int64 → JSON string
-        ]
-    )
-
-
-def _kv_list() -> T.ArrayType:
-    return T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("key", T.StringType()),
-                T.StructField("value", _anyvalue_struct()),
-            ]
-        )
-    )
-
-
-OTLP_EXPORT_LOGS_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "resourceLogs",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField(
-                            "resource",
-                            T.StructType(
-                                [T.StructField("attributes", _kv_list())]
-                            ),
-                        ),
-                        T.StructField(
-                            "scopeLogs",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField(
-                                            "scope",
-                                            T.StructType(
-                                                [
-                                                    T.StructField(
-                                                        "name", T.StringType()
-                                                    ),
-                                                    T.StructField(
-                                                        "version",
-                                                        T.StringType(),
-                                                    ),
-                                                ]
-                                            ),
-                                        ),
-                                        T.StructField(
-                                            "logRecords",
-                                            T.ArrayType(
-                                                T.StructType(
-                                                    [
-                                                        T.StructField(
-                                                            "timeUnixNano",
-                                                            T.StringType(),
-                                                        ),
-                                                        T.StructField(
-                                                            "severityNumber",
-                                                            T.IntegerType(),
-                                                        ),
-                                                        T.StructField(
-                                                            "severityText",
-                                                            T.StringType(),
-                                                        ),
-                                                        T.StructField(
-                                                            "body",
-                                                            _anyvalue_struct(),
-                                                        ),
-                                                        T.StructField(
-                                                            "attributes",
-                                                            _kv_list(),
-                                                        ),
-                                                        T.StructField(
-                                                            "traceId",
-                                                            T.StringType(),
-                                                        ),
-                                                        T.StructField(
-                                                            "spanId",
-                                                            T.StringType(),
-                                                        ),
-                                                        T.StructField(
-                                                            "droppedAttributesCount",
-                                                            T.IntegerType(),
-                                                        ),
-                                                    ]
-                                                )
-                                            ),
-                                        ),
-                                    ]
-                                )
-                            ),
-                        ),
-                    ]
-                )
-            ),
-        )
-    ]
-)
-
-
-def _attr(entries, key: str):
-    """First value for ``key`` in a KeyValue list — string branch first,
-    int branch as fallback (the corpus never uses both on one key).
-    ``F.get`` (not ``[0]``) so an absent key or empty attribute list is
-    NULL instead of an ANSI INVALID_ARRAY_INDEX error."""
-    hit = F.get(F.filter(entries, lambda a: a["key"] == F.lit(key)), 0)["value"]
-    return F.coalesce(hit["stringValue"], hit["intValue"])
-
-
-def parse_otlp_json(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Decode a column of OTLP/JSON ExportLogsServiceRequest payloads into
-    one flat row per LogRecord.
-
-    Plan shape: `from_json` → 3 nested `explode`s (Generate nodes) → one
-    projection; everything stays in whole-stage codegen, and the explode
-    fan-out is bounded by the request batch size, never the corpus. At
-    100 TB this is a scan-side decode with no shuffle at all — the exact
-    role of the reference's OTLP receiver (views/otlp/proto/logs.rs).
-    """
-    req = F.from_json(F.col(payload_col), OTLP_EXPORT_LOGS_SCHEMA)
-    rl = df.withColumn("_rl", F.explode(req["resourceLogs"]))
-    sl = rl.select(
-        F.col("_rl")["resource"]["attributes"].alias("_res_attrs"),
-        F.explode(F.col("_rl")["scopeLogs"]).alias("_sl"),
-    )
-    rec = sl.select(
-        "_res_attrs",
-        F.col("_sl")["scope"]["name"].alias("scope_name"),
-        F.col("_sl")["scope"]["version"].alias("scope_version"),
-        F.explode(F.col("_sl")["logRecords"]).alias("_rec"),
-    )
-    r = F.col("_rec")
-    return rec.select(
-        _attr(F.col("_res_attrs"), "service.name").alias("service_name"),
-        _attr(F.col("_res_attrs"), "deployment.environment").alias(
-            "environment"
-        ),
-        "scope_name",
-        "scope_version",
-        r["timeUnixNano"].cast("long").alias("time_unix_nano"),
-        r["severityNumber"].alias("severity_number"),
-        r["severityText"].alias("severity_text"),
-        r["body"]["stringValue"].alias("body"),
-        r["traceId"].alias("trace_id"),
-        r["spanId"].alias("span_id"),
-        F.coalesce(r["droppedAttributesCount"], F.lit(0)).alias(
-            "dropped_attributes_count"
-        ),
-        _attr(r["attributes"], "event.index").cast("long").alias(
-            "event_index"
-        ),
-        F.map_from_entries(
-            F.transform(
-                r["attributes"],
-                lambda a: F.struct(
-                    a["key"].alias("key"),
-                    F.coalesce(
-                        a["value"]["stringValue"], a["value"]["intValue"]
-                    ).alias("value"),
-                ),
-            )
-        ).alias("attributes"),
-    )
-
-
-# --- traces ------------------------------------------------------------------
 
 SPAN_NAMES = ["GET /api", "POST /ingest", "db.query", "cache.get", "publish"]
 # proto SpanKind: INTERNAL=1 SERVER=2 CLIENT=3 PRODUCER=4 CONSUMER=5
@@ -329,13 +202,7 @@ def generate_otlp_json_trace_requests(n_spans: int, seed: int = 43) -> list[str]
     uniformly chosen earlier span in the same request — small trees, the
     shape the trace-assembly operators consume."""
     rng = np.random.RandomState(seed)
-
-    sizes: list[int] = []
-    left = n_spans
-    while left > 0:
-        s = int(rng.randint(2, 13))
-        sizes.append(min(s, left))
-        left -= min(s, left)
+    sizes = _batch_sizes(rng, n_spans, 2, 13)
 
     n = n_spans
     svc = rng.randint(0, len(SERVICES), size=len(sizes))
@@ -376,137 +243,13 @@ def generate_otlp_json_trace_requests(n_spans: int, seed: int = 43) -> list[str]
             if k > 0:  # root omits parentSpanId (proto3 omits empties)
                 span["parentSpanId"] = span_ids[parent_pick[i] % k]
             spans.append(span)
-        name, ver = SCOPES[scope_pick[req_i]]
+        resource = [_kv_str("service.name", SERVICES[svc[req_i]])]
         out.append(
-            json.dumps(
-                {
-                    "resourceSpans": [
-                        {
-                            "resource": {
-                                "attributes": [
-                                    _kv_str("service.name", SERVICES[svc[req_i]])
-                                ]
-                            },
-                            "scopeSpans": [
-                                {
-                                    "scope": {"name": name, "version": ver},
-                                    "spans": spans,
-                                }
-                            ],
-                        }
-                    ]
-                },
-                separators=(",", ":"),
-            )
+            _request("traces", resource, [(SCOPES[scope_pick[req_i]], spans)])
         )
         span_i += size
     return out
 
-
-OTLP_EXPORT_TRACES_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "resourceSpans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField(
-                            "resource",
-                            T.StructType([T.StructField("attributes", _kv_list())]),
-                        ),
-                        T.StructField(
-                            "scopeSpans",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField(
-                                            "scope",
-                                            T.StructType(
-                                                [
-                                                    T.StructField("name", T.StringType()),
-                                                    T.StructField("version", T.StringType()),
-                                                ]
-                                            ),
-                                        ),
-                                        T.StructField(
-                                            "spans",
-                                            T.ArrayType(
-                                                T.StructType(
-                                                    [
-                                                        T.StructField("traceId", T.StringType()),
-                                                        T.StructField("spanId", T.StringType()),
-                                                        T.StructField("parentSpanId", T.StringType()),
-                                                        T.StructField("name", T.StringType()),
-                                                        T.StructField("kind", T.IntegerType()),
-                                                        T.StructField("startTimeUnixNano", T.StringType()),
-                                                        T.StructField("endTimeUnixNano", T.StringType()),
-                                                        T.StructField("attributes", _kv_list()),
-                                                        T.StructField(
-                                                            "status",
-                                                            T.StructType(
-                                                                [
-                                                                    T.StructField("code", T.IntegerType()),
-                                                                    T.StructField("message", T.StringType()),
-                                                                ]
-                                                            ),
-                                                        ),
-                                                    ]
-                                                )
-                                            ),
-                                        ),
-                                    ]
-                                )
-                            ),
-                        ),
-                    ]
-                )
-            ),
-        )
-    ]
-)
-
-
-def parse_otlp_traces_json(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Decode OTLP/JSON ExportTraceServiceRequest payloads into one flat
-    row per span — the traces twin of :func:`parse_otlp_json`, same
-    zero-Python zero-shuffle scan-side plan. ``status.code`` defaults to
-    0 (UNSET) when omitted, per the proto3 default; a missing
-    ``parentSpanId`` stays NULL (root span)."""
-    req = F.from_json(F.col(payload_col), OTLP_EXPORT_TRACES_SCHEMA)
-    rs = df.withColumn("_rs", F.explode(req["resourceSpans"]))
-    ss = rs.select(
-        F.col("_rs")["resource"]["attributes"].alias("_res_attrs"),
-        F.explode(F.col("_rs")["scopeSpans"]).alias("_ss"),
-    )
-    sp = ss.select(
-        "_res_attrs",
-        F.col("_ss")["scope"]["name"].alias("scope_name"),
-        F.col("_ss")["scope"]["version"].alias("scope_version"),
-        F.explode(F.col("_ss")["spans"]).alias("_sp"),
-    )
-    s = F.col("_sp")
-    start = s["startTimeUnixNano"].cast("long")
-    end = s["endTimeUnixNano"].cast("long")
-    return sp.select(
-        _attr(F.col("_res_attrs"), "service.name").alias("service_name"),
-        "scope_name",
-        "scope_version",
-        s["traceId"].alias("trace_id"),
-        s["spanId"].alias("span_id"),
-        s["parentSpanId"].alias("parent_span_id"),
-        s["name"].alias("name"),
-        s["kind"].alias("kind"),
-        start.alias("start_unix_nano"),
-        end.alias("end_unix_nano"),
-        (end - start).alias("duration_ns"),
-        F.coalesce(s["status"]["code"], F.lit(0)).alias("status_code"),
-        s["status"]["message"].alias("status_message"),
-        _attr(s["attributes"], "peer.service").alias("peer_service"),
-        _attr(s["attributes"], "span.seq").cast("long").alias("span_seq"),
-    )
-
-
-# --- metrics ------------------------------------------------------------------
 
 # (name, unit, kind); kind picks the Metric `data` oneof branch
 METRIC_DEFS = [
@@ -536,13 +279,7 @@ def generate_otlp_json_metric_requests(n_points: int, seed: int = 44) -> list[st
     integers, and absent oneof branches / empty sub-messages (a
     zero-bucket `negative` side) are omitted entirely."""
     rng = np.random.RandomState(seed)
-
-    sizes: list[int] = []
-    left = n_points
-    while left > 0:
-        s = int(rng.randint(3, 13))
-        sizes.append(min(s, left))
-        left -= min(s, left)
+    sizes = _batch_sizes(rng, n_points, 3, 13)
 
     n = n_points
     svc = rng.randint(0, len(SERVICES), size=len(sizes))
@@ -606,67 +343,201 @@ def generate_otlp_json_metric_requests(n_points: int, seed: int = 44) -> list[st
             pts.append(pt)
         pt_i += size
 
-        metric: dict = {"name": name, "unit": unit}
-        if kind == "gauge":
-            metric["gauge"] = {"dataPoints": pts}
-        elif kind == "sum":
-            metric["sum"] = {
-                "dataPoints": pts,
-                "aggregationTemporality": TEMPORALITIES[temp_pick[req_i]],
-                "isMonotonic": name.endswith(("count", "time")),
-            }
-        elif kind == "exp_histogram":
-            metric["exponentialHistogram"] = {
-                "dataPoints": pts,
-                "aggregationTemporality": TEMPORALITIES[temp_pick[req_i]],
-            }
-        elif kind == "summary":
-            metric["summary"] = {"dataPoints": pts}
-        else:
-            metric["histogram"] = {
-                "dataPoints": pts,
-                "aggregationTemporality": TEMPORALITIES[temp_pick[req_i]],
-            }
-        s_name, s_ver = SCOPES[scope_pick[req_i]]
+        branch = _BRANCH[kind]
+        data: dict = {_DATA_POINTS: pts}
+        if branch.temporality:
+            data[_TEMPORALITY] = TEMPORALITIES[temp_pick[req_i]]
+        if branch.monotonic:
+            data[_MONOTONIC] = name.endswith(("count", "time"))
+        metric = {"name": name, "unit": unit, branch.field: data}
+        resource = [_kv_str("service.name", SERVICES[svc[req_i]])]
         out.append(
-            json.dumps(
-                {
-                    "resourceMetrics": [
-                        {
-                            "resource": {
-                                "attributes": [
-                                    _kv_str("service.name", SERVICES[svc[req_i]])
-                                ]
-                            },
-                            "scopeMetrics": [
-                                {
-                                    "scope": {"name": s_name, "version": s_ver},
-                                    "metrics": [metric],
-                                }
-                            ],
-                        }
-                    ]
-                },
-                separators=(",", ":"),
-            )
+            _request("metrics", resource, [(SCOPES[scope_pick[req_i]], [metric])])
         )
     return out
 
 
-def _number_dp_schema() -> T.ArrayType:
-    return T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("timeUnixNano", T.StringType()),
-                T.StructField("asDouble", T.DoubleType()),
-                T.StructField("asInt", T.StringType()),  # uint64 → JSON string
-                T.StructField("attributes", _kv_list()),
-            ]
-        )
+# --- read schemas ---------------------------------------------------------------
+
+
+def _struct(**fields: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(k, t) for k, t in fields.items()])
+
+
+_STR, _INT, _LONG, _DBL = T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType()
+# the AnyValue oneof's sparse-union analog: one nullable field per branch
+# the corpus uses (from_json leaves absent ones NULL)
+_ANYVALUE = _struct(stringValue=_STR, intValue=_STR)  # int64 → JSON string
+_KV_LIST = T.ArrayType(_struct(key=_STR, value=_ANYVALUE))
+
+
+def _envelope_schema(signal: str, item: T.StructType) -> T.StructType:
+    """The Export*ServiceRequest read schema: resource → scope → ``item``."""
+    res_key, scope_key, items_key = _ENVELOPE[signal]
+    scope = _struct(
+        scope=_struct(name=_STR, version=_STR),
+        **{items_key: T.ArrayType(item)},
     )
+    resource = _struct(
+        resource=_struct(attributes=_KV_LIST),
+        **{scope_key: T.ArrayType(scope)},
+    )
+    return _struct(**{res_key: T.ArrayType(resource)})
 
 
-METRIC_BRANCHES = ("gauge", "sum", "histogram", "exp_histogram", "summary")
+OTLP_EXPORT_LOGS_SCHEMA = _envelope_schema(
+    "logs",
+    _struct(
+        timeUnixNano=_STR,
+        severityNumber=_INT,
+        severityText=_STR,
+        body=_ANYVALUE,
+        attributes=_KV_LIST,
+        traceId=_STR,
+        spanId=_STR,
+        droppedAttributesCount=_INT,
+    ),
+)
+
+OTLP_EXPORT_TRACES_SCHEMA = _envelope_schema(
+    "traces",
+    _struct(
+        traceId=_STR,
+        spanId=_STR,
+        parentSpanId=_STR,
+        name=_STR,
+        kind=_INT,
+        startTimeUnixNano=_STR,
+        endTimeUnixNano=_STR,
+        attributes=_KV_LIST,
+        status=_struct(code=_INT, message=_STR),
+    ),
+)
+
+
+def _as_long(c: Column) -> Column:
+    return c.cast("long")
+
+
+def _as_string(c: Column) -> Column:
+    return c.cast("string")
+
+
+class _PointField(NamedTuple):
+    """One data-point wire field, between ``timeUnixNano`` and
+    ``attributes``: its JSON key and read type, the common point fields
+    it decodes to — (name, type, wire point → value) — and its encoding
+    from the flat row (None: decode-only)."""
+
+    key: str
+    wire_type: T.DataType
+    decode: tuple[tuple[str, T.DataType, Callable[[Column], Column]], ...]
+    encode: Callable[[], Column] | None
+
+
+_QUANTILES = T.ArrayType(_struct(quantile=_DBL, value=_DBL))
+# Every data-point wire field of the five branches, in read-schema order.
+_POINT_FIELDS = (
+    _PointField(
+        "asDouble", _DBL,
+        (("value", _DBL,
+          lambda p: F.coalesce(p["asDouble"], p["asInt"].cast("double"))),),
+        lambda: F.col("value"),
+    ),
+    # the parse folds asInt into `value`; encoders write asDouble only
+    _PointField("asInt", _STR, (), None),  # uint64 → JSON string
+    _PointField(
+        "count", _STR,
+        (("count", _LONG, lambda p: p["count"].cast("long")),),
+        lambda: F.col("count").cast("string"),
+    ),
+    _PointField(
+        "sum", _DBL,
+        (("sum", _DBL, lambda p: p["sum"]),),
+        lambda: F.col("sum_value"),
+    ),
+    _PointField(
+        "bucketCounts", T.ArrayType(_STR),
+        (("bucket_counts", T.ArrayType(_LONG),
+          lambda p: F.transform(p["bucketCounts"], _as_long)),),
+        lambda: F.transform(F.col("bucket_counts"), _as_string),
+    ),
+    _PointField(
+        "explicitBounds", T.ArrayType(_DBL),
+        (("explicit_bounds", T.ArrayType(_DBL), lambda p: p["explicitBounds"]),),
+        lambda: F.col("explicit_bounds"),
+    ),
+    _PointField(
+        "scale", _INT,
+        (("scale", _INT, lambda p: p["scale"]),),
+        lambda: F.col("scale"),
+    ),
+    _PointField(
+        "zeroCount", _STR,
+        (("zero_count", _LONG, lambda p: p["zeroCount"].cast("long")),),
+        lambda: F.col("zero_count").cast("string"),
+    ),
+    _PointField(
+        "positive", _struct(offset=_INT, bucketCounts=T.ArrayType(_STR)),
+        (
+            ("pos_offset", _INT, lambda p: p["positive"]["offset"]),
+            ("pos_bucket_counts", T.ArrayType(_LONG),
+             lambda p: F.transform(p["positive"]["bucketCounts"], _as_long)),
+        ),
+        lambda: F.struct(
+            F.col("pos_offset").alias("offset"),
+            F.transform(F.col("pos_bucket_counts"), _as_string).alias("bucketCounts"),
+        ),
+    ),
+    _PointField(
+        "quantileValues", _QUANTILES,
+        (("quantiles", _QUANTILES, lambda p: p["quantileValues"]),),
+        lambda: F.col("quantiles"),
+    ),
+)
+
+
+class _Branch(NamedTuple):
+    """One Metric `data` oneof branch: its ``metric_type`` tag, JSON
+    field, data-point wire fields, and whether it carries
+    aggregationTemporality / isMonotonic."""
+
+    name: str
+    field: str
+    points: tuple[str, ...]
+    temporality: bool
+    monotonic: bool
+
+
+_NUMBER = ("asDouble", "asInt")
+_BRANCHES = (
+    _Branch("gauge", "gauge", _NUMBER, False, False),
+    _Branch("sum", "sum", _NUMBER, True, True),
+    _Branch(
+        "histogram", "histogram",
+        ("count", "sum", "bucketCounts", "explicitBounds"), True, False,
+    ),
+    _Branch(
+        "exp_histogram", "exponentialHistogram",
+        ("count", "sum", "scale", "zeroCount", "positive"), True, False,
+    ),
+    _Branch("summary", "summary", ("count", "sum", "quantileValues"), False, False),
+)
+_BRANCH = {b.name: b for b in _BRANCHES}
+# metric_type's when-chain tests the other decoded branches in table order
+# and tags whatever is left with this one
+_OTHERWISE = "histogram"
+_DATA_POINTS = "dataPoints"
+_TEMPORALITY = "aggregationTemporality"
+_MONOTONIC = "isMonotonic"
+METRIC_BRANCHES = tuple(_BRANCH)
+
+# The common point struct every branch's dataPoints normalize to.
+_POINT = _struct(
+    t=_STR,
+    **{name: t for f in _POINT_FIELDS for name, t, _ in f.decode},
+    attrs=_KV_LIST,
+)
 
 
 def _metrics_schema(branches: tuple[str, ...]) -> T.StructType:
@@ -678,172 +549,159 @@ def _metrics_schema(branches: tuple[str, ...]) -> T.StructType:
     analog of parquet column pruning (guide §6: pruning must reach the
     scan; Catalyst's JSON schema pruning cannot see through the
     generator chain, so the caller states its branches)."""
-    metric_fields = [
-        T.StructField("name", T.StringType()),
-        T.StructField("unit", T.StringType()),
-    ]
-    if "gauge" in branches:
-        metric_fields.append(
-            T.StructField(
-                "gauge",
-                T.StructType([T.StructField("dataPoints", _number_dp_schema())]),
-            )
+    fields = {}
+    for b in _BRANCHES:
+        if b.name not in branches:
+            continue
+        point = _struct(
+            timeUnixNano=_STR,
+            **{f.key: f.wire_type for f in _POINT_FIELDS if f.key in b.points},
+            attributes=_KV_LIST,
         )
-    if "sum" in branches:
-        metric_fields.append(
-            T.StructField(
-                "sum",
-                T.StructType(
-                    [
-                        T.StructField("dataPoints", _number_dp_schema()),
-                        T.StructField("aggregationTemporality", T.IntegerType()),
-                        T.StructField("isMonotonic", T.BooleanType()),
-                    ]
-                ),
-            )
-        )
-    if "histogram" in branches:
-        metric_fields.append(
-            T.StructField(
-                "histogram",
-                T.StructType(
-                    [
-                        T.StructField(
-                            "dataPoints",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField("timeUnixNano", T.StringType()),
-                                        T.StructField("count", T.StringType()),
-                                        T.StructField("sum", T.DoubleType()),
-                                        T.StructField("bucketCounts", T.ArrayType(T.StringType())),
-                                        T.StructField("explicitBounds", T.ArrayType(T.DoubleType())),
-                                        T.StructField("attributes", _kv_list()),
-                                    ]
-                                )
-                            ),
-                        ),
-                        T.StructField("aggregationTemporality", T.IntegerType()),
-                    ]
-                ),
-            )
-        )
-    if "exp_histogram" in branches:
-        metric_fields.append(
-            T.StructField(
-                "exponentialHistogram",
-                T.StructType(
-                    [
-                        T.StructField(
-                            "dataPoints",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField("timeUnixNano", T.StringType()),
-                                        T.StructField("count", T.StringType()),
-                                        T.StructField("sum", T.DoubleType()),
-                                        T.StructField("scale", T.IntegerType()),
-                                        T.StructField("zeroCount", T.StringType()),
-                                        T.StructField(
-                                            "positive",
-                                            T.StructType(
-                                                [
-                                                    T.StructField("offset", T.IntegerType()),
-                                                    T.StructField("bucketCounts", T.ArrayType(T.StringType())),
-                                                ]
-                                            ),
-                                        ),
-                                        T.StructField("attributes", _kv_list()),
-                                    ]
-                                )
-                            ),
-                        ),
-                        T.StructField("aggregationTemporality", T.IntegerType()),
-                    ]
-                ),
-            )
-        )
-    if "summary" in branches:
-        metric_fields.append(
-            T.StructField(
-                "summary",
-                T.StructType(
-                    [
-                        T.StructField(
-                            "dataPoints",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField("timeUnixNano", T.StringType()),
-                                        T.StructField("count", T.StringType()),
-                                        T.StructField("sum", T.DoubleType()),
-                                        T.StructField(
-                                            "quantileValues",
-                                            T.ArrayType(
-                                                T.StructType(
-                                                    [
-                                                        T.StructField("quantile", T.DoubleType()),
-                                                        T.StructField("value", T.DoubleType()),
-                                                    ]
-                                                )
-                                            ),
-                                        ),
-                                        T.StructField("attributes", _kv_list()),
-                                    ]
-                                )
-                            ),
-                        ),
-                    ]
-                ),
-            )
-        )
-    return T.StructType(
-        [
-            T.StructField(
-                "resourceMetrics",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField(
-                                "resource",
-                                T.StructType([T.StructField("attributes", _kv_list())]),
-                            ),
-                            T.StructField(
-                                "scopeMetrics",
-                                T.ArrayType(
-                                    T.StructType(
-                                        [
-                                            T.StructField(
-                                                "scope",
-                                                T.StructType(
-                                                    [
-                                                        T.StructField("name", T.StringType()),
-                                                        T.StructField("version", T.StringType()),
-                                                    ]
-                                                ),
-                                            ),
-                                            T.StructField(
-                                                "metrics",
-                                                T.ArrayType(T.StructType(metric_fields)),
-                                            ),
-                                        ]
-                                    )
-                                ),
-                            ),
-                        ]
-                    )
-                ),
-            )
-        ]
-    )
+        data = {_DATA_POINTS: T.ArrayType(point)}
+        if b.temporality:
+            data[_TEMPORALITY] = _INT
+        if b.monotonic:
+            data[_MONOTONIC] = T.BooleanType()
+        fields[b.field] = _struct(**data)
+    return _envelope_schema("metrics", _struct(name=_STR, unit=_STR, **fields))
 
 
 OTLP_EXPORT_METRICS_SCHEMA = _metrics_schema(METRIC_BRANCHES)
 
 
+# --- decode (receiver side) -------------------------------------------------------
+
+
+def _attr(entries, key: str):
+    """First value for ``key`` in a KeyValue list — string branch first,
+    int branch as fallback (the corpus never uses both on one key).
+    ``F.get`` (not ``[0]``) so an absent key or empty attribute list is
+    NULL instead of an ANSI INVALID_ARRAY_INDEX error."""
+    hit = F.get(F.filter(entries, lambda a: a["key"] == F.lit(key)), 0)["value"]
+    return F.coalesce(hit["stringValue"], hit["intValue"])
+
+
+def _resource(signal: str) -> list[Column]:
+    """The flat resource-attribute columns of an ``_unnest``ed frame."""
+    return [
+        _attr(F.col("_res_attrs"), key).alias(col)
+        for key, col in _RESOURCE_ATTRS[signal]
+    ]
+
+
+def _unnest(df: DataFrame, schema: T.StructType, signal: str) -> DataFrame:
+    """``from_json`` + explode resources, scopes, items: one row per item
+    with ``_res_attrs``, ``scope_name``, ``scope_version`` and ``_item``.
+    The explode fan-out is bounded by the request batch size, never the
+    corpus, and nothing here shuffles."""
+    res_key, scope_key, items_key = _ENVELOPE[signal]
+    req = F.from_json(F.col(PAYLOAD_COL), schema)
+    res = df.withColumn("_res", F.explode(req[res_key]))
+    scopes = res.select(
+        F.col("_res")["resource"]["attributes"].alias("_res_attrs"),
+        F.explode(F.col("_res")[scope_key]).alias("_scope"),
+    )
+    return scopes.select(
+        "_res_attrs",
+        F.col("_scope")["scope"]["name"].alias("scope_name"),
+        F.col("_scope")["scope"]["version"].alias("scope_version"),
+        F.explode(F.col("_scope")[items_key]).alias("_item"),
+    )
+
+
+def parse_otlp_json(df: DataFrame) -> DataFrame:
+    """Decode a ``payload`` column of OTLP/JSON ExportLogsServiceRequest
+    payloads into one flat row per LogRecord.
+
+    Plan shape: `from_json` → 3 nested `explode`s (Generate nodes) → one
+    projection; everything stays in whole-stage codegen. At 100 TB this
+    is a scan-side decode with no shuffle at all — the exact role of the
+    reference's OTLP receiver (views/otlp/proto/logs.rs).
+    """
+    r = F.col("_item")
+    return _unnest(df, OTLP_EXPORT_LOGS_SCHEMA, "logs").select(
+        *_resource("logs"),
+        "scope_name",
+        "scope_version",
+        r["timeUnixNano"].cast("long").alias("time_unix_nano"),
+        r["severityNumber"].alias("severity_number"),
+        r["severityText"].alias("severity_text"),
+        r["body"]["stringValue"].alias("body"),
+        r["traceId"].alias("trace_id"),
+        r["spanId"].alias("span_id"),
+        F.coalesce(r["droppedAttributesCount"], F.lit(0)).alias(
+            "dropped_attributes_count"
+        ),
+        _attr(r["attributes"], "event.index").cast("long").alias(
+            "event_index"
+        ),
+        F.map_from_entries(
+            F.transform(
+                r["attributes"],
+                lambda a: F.struct(
+                    a["key"].alias("key"),
+                    F.coalesce(
+                        a["value"]["stringValue"], a["value"]["intValue"]
+                    ).alias("value"),
+                ),
+            )
+        ).alias("attributes"),
+    )
+
+
+def parse_otlp_traces_json(df: DataFrame) -> DataFrame:
+    """Decode OTLP/JSON ExportTraceServiceRequest payloads into one flat
+    row per span — the traces twin of :func:`parse_otlp_json`, same
+    zero-Python zero-shuffle scan-side plan. ``status.code`` defaults to
+    0 (UNSET) when omitted, per the proto3 default; a missing
+    ``parentSpanId`` stays NULL (root span)."""
+    s = F.col("_item")
+    start = s["startTimeUnixNano"].cast("long")
+    end = s["endTimeUnixNano"].cast("long")
+    return _unnest(df, OTLP_EXPORT_TRACES_SCHEMA, "traces").select(
+        *_resource("traces"),
+        "scope_name",
+        "scope_version",
+        s["traceId"].alias("trace_id"),
+        s["spanId"].alias("span_id"),
+        s["parentSpanId"].alias("parent_span_id"),
+        s["name"].alias("name"),
+        s["kind"].alias("kind"),
+        start.alias("start_unix_nano"),
+        end.alias("end_unix_nano"),
+        (end - start).alias("duration_ns"),
+        F.coalesce(s["status"]["code"], F.lit(0)).alias("status_code"),
+        s["status"]["message"].alias("status_message"),
+        _attr(s["attributes"], "peer.service").alias("peer_service"),
+        _attr(s["attributes"], "span.seq").cast("long").alias("span_seq"),
+    )
+
+
+def _point(branch: _Branch) -> Callable[[Column], Column]:
+    """``branch``'s wire data point → the common point struct; fields the
+    branch lacks are typed NULLs."""
+
+    def point(p: Column) -> Column:
+        decoded = {
+            name: fn(p)
+            for f in _POINT_FIELDS if f.key in branch.points
+            for name, _, fn in f.decode
+        }
+        return F.struct(
+            p["timeUnixNano"].alias("t"),
+            *[
+                decoded.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+                for f in _POINT.fields[1:-1]
+            ],
+            p["attributes"].alias("attrs"),
+        )
+
+    return point
+
+
 def parse_otlp_metrics_json(
     df: DataFrame,
-    payload_col: str = "payload",
     branches: tuple[str, ...] = METRIC_BRANCHES,
 ) -> DataFrame:
     """Decode OTLP/JSON ExportMetricsServiceRequest payloads into one flat
@@ -868,189 +726,50 @@ def parse_otlp_metrics_json(
     dataPoints are absent from the schema), so filtering on
     ``metric_type`` after a restricted decode equals filtering after the
     full decode. Output schema is identical for every branch choice."""
-    _dn = F.lit(None).cast("double")
-    _ln = F.lit(None).cast("long")
-    _in = F.lit(None).cast("int")
-    _an = F.lit(None).cast("array<bigint>")
-    _bn = F.lit(None).cast("array<double>")
-    _qn = F.lit(None).cast("array<struct<quantile:double,value:double>>")
-
-    def _num_pt(p):
-        return F.struct(
-            p["timeUnixNano"].alias("t"),
-            F.coalesce(p["asDouble"], p["asInt"].cast("double")).alias("value"),
-            _ln.alias("count"),
-            _dn.alias("sum"),
-            _an.alias("bucket_counts"),
-            _bn.alias("explicit_bounds"),
-            _in.alias("scale"),
-            _ln.alias("zero_count"),
-            _in.alias("pos_offset"),
-            _an.alias("pos_bucket_counts"),
-            _qn.alias("quantiles"),
-            p["attributes"].alias("attrs"),
-        )
-
-    def _hist_pt(p):
-        return F.struct(
-            p["timeUnixNano"].alias("t"),
-            _dn.alias("value"),
-            p["count"].cast("long").alias("count"),
-            p["sum"].alias("sum"),
-            F.transform(p["bucketCounts"], lambda c: c.cast("long")).alias(
-                "bucket_counts"
-            ),
-            p["explicitBounds"].alias("explicit_bounds"),
-            _in.alias("scale"),
-            _ln.alias("zero_count"),
-            _in.alias("pos_offset"),
-            _an.alias("pos_bucket_counts"),
-            _qn.alias("quantiles"),
-            p["attributes"].alias("attrs"),
-        )
-
-    def _exp_pt(p):
-        return F.struct(
-            p["timeUnixNano"].alias("t"),
-            _dn.alias("value"),
-            p["count"].cast("long").alias("count"),
-            p["sum"].alias("sum"),
-            _an.alias("bucket_counts"),
-            _bn.alias("explicit_bounds"),
-            p["scale"].alias("scale"),
-            p["zeroCount"].cast("long").alias("zero_count"),
-            p["positive"]["offset"].alias("pos_offset"),
-            F.transform(
-                p["positive"]["bucketCounts"], lambda c: c.cast("long")
-            ).alias("pos_bucket_counts"),
-            _qn.alias("quantiles"),
-            p["attributes"].alias("attrs"),
-        )
-
-    def _summary_pt(p):
-        return F.struct(
-            p["timeUnixNano"].alias("t"),
-            _dn.alias("value"),
-            p["count"].cast("long").alias("count"),
-            p["sum"].alias("sum"),
-            _an.alias("bucket_counts"),
-            _bn.alias("explicit_bounds"),
-            _in.alias("scale"),
-            _ln.alias("zero_count"),
-            _in.alias("pos_offset"),
-            _an.alias("pos_bucket_counts"),
-            p["quantileValues"].alias("quantiles"),
-            p["attributes"].alias("attrs"),
-        )
-
-    _empty = F.array().cast(
-        "array<struct<t:string,value:double,count:bigint,sum:double,"
-        "bucket_counts:array<bigint>,explicit_bounds:array<double>,"
-        "scale:int,zero_count:bigint,pos_offset:int,"
-        "pos_bucket_counts:array<bigint>,"
-        "quantiles:array<struct<quantile:double,value:double>>,"
-        "attrs:array<struct<key:string,value:struct<stringValue:string,intValue:string>>>>>"
-    )
-
     unknown = set(branches) - set(METRIC_BRANCHES)
     if unknown:
         raise ValueError(f"unknown metric branches: {sorted(unknown)}")
     if not branches:
         raise ValueError("at least one metric branch is required")
-    req = F.from_json(F.col(payload_col), _metrics_schema(branches))
-    rm = df.withColumn("_rm", F.explode(req["resourceMetrics"]))
-    sm = rm.select(
-        F.col("_rm")["resource"]["attributes"].alias("_res_attrs"),
-        F.explode(F.col("_rm")["scopeMetrics"]).alias("_sm"),
-    )
-    m = sm.select(
-        "_res_attrs",
-        F.col("_sm")["scope"]["name"].alias("scope_name"),
-        F.col("_sm")["scope"]["version"].alias("scope_version"),
-        F.explode(F.col("_sm")["metrics"]).alias("_m"),
-    )
-    mc = F.col("_m")
-    # metric_type / temporality / monotonic / point expansion over the
-    # DECODED branches only (expressions must not name absent fields);
-    # the when-chain order and the histogram `otherwise` match the
-    # all-branch form exactly when every branch is requested
-    type_when = F.when(F.lit(False), F.lit(None).cast("string"))
-    if "gauge" in branches:
-        type_when = type_when.when(mc["gauge"].isNotNull(), F.lit("gauge"))
-    if "sum" in branches:
-        type_when = type_when.when(mc["sum"].isNotNull(), F.lit("sum"))
-    if "exp_histogram" in branches:
-        type_when = type_when.when(
-            mc["exponentialHistogram"].isNotNull(), F.lit("exp_histogram")
-        )
-    if "summary" in branches:
-        type_when = type_when.when(mc["summary"].isNotNull(), F.lit("summary"))
-    metric_type = (
-        type_when.otherwise(F.lit("histogram"))
-        if "histogram" in branches
-        else type_when
-    )
-    temporality_members = [
-        mc["sum"]["aggregationTemporality"] if "sum" in branches else None,
-        mc["histogram"]["aggregationTemporality"]
-        if "histogram" in branches
-        else None,
-        mc["exponentialHistogram"]["aggregationTemporality"]
-        if "exp_histogram" in branches
-        else None,
+    decoded = [b for b in _BRANCHES if b.name in branches]
+    mc = F.col("_item")
+    # expressions over the DECODED branches only (they must not name
+    # absent fields); the when-chain order (gauge, sum, exp_histogram,
+    # summary, `otherwise` histogram) matches the all-branch form exactly
+    # when every branch is requested
+    metric_type = F.when(F.lit(False), F.lit(None).cast("string"))
+    for b in decoded:
+        if b.name != _OTHERWISE:
+            metric_type = metric_type.when(mc[b.field].isNotNull(), F.lit(b.name))
+    if _OTHERWISE in branches:
+        metric_type = metric_type.otherwise(F.lit(_OTHERWISE))
+    temporality = [mc[b.field][_TEMPORALITY] for b in decoded if b.temporality]
+    monotonic = [mc[b.field][_MONOTONIC] for b in decoded if b.monotonic]
+    empty = F.array().cast(T.ArrayType(_POINT))
+    point_arrays = [
+        F.coalesce(F.transform(mc[b.field][_DATA_POINTS], _point(b)), empty)
+        for b in decoded
     ]
-    temporality_members = [c for c in temporality_members if c is not None]
-    temporality = (
-        F.coalesce(*temporality_members)
-        if temporality_members
-        else F.lit(None).cast("int")
-    )
-    point_arrays = []
-    if "gauge" in branches:
-        point_arrays.append(
-            F.coalesce(F.transform(mc["gauge"]["dataPoints"], _num_pt), _empty)
-        )
-    if "sum" in branches:
-        point_arrays.append(
-            F.coalesce(F.transform(mc["sum"]["dataPoints"], _num_pt), _empty)
-        )
-    if "histogram" in branches:
-        point_arrays.append(
-            F.coalesce(F.transform(mc["histogram"]["dataPoints"], _hist_pt), _empty)
-        )
-    if "exp_histogram" in branches:
-        point_arrays.append(
-            F.coalesce(
-                F.transform(mc["exponentialHistogram"]["dataPoints"], _exp_pt),
-                _empty,
-            )
-        )
-    if "summary" in branches:
-        point_arrays.append(
-            F.coalesce(F.transform(mc["summary"]["dataPoints"], _summary_pt), _empty)
-        )
-    pts = m.select(
+    pts = _unnest(df, _metrics_schema(branches), "metrics").select(
         "_res_attrs",
         "scope_name",
         "scope_version",
         mc["name"].alias("metric_name"),
         mc["unit"].alias("metric_unit"),
         metric_type.alias("metric_type"),
-        temporality.alias("temporality"),
         (
-            mc["sum"]["isMonotonic"]
-            if "sum" in branches
-            else F.lit(None).cast("boolean")
+            F.coalesce(*temporality) if temporality else F.lit(None).cast("int")
+        ).alias("temporality"),
+        (
+            F.coalesce(*monotonic) if monotonic else F.lit(None).cast("boolean")
         ).alias("is_monotonic"),
         F.explode(
-            F.concat(*point_arrays)
-            if len(point_arrays) > 1
-            else point_arrays[0]
+            F.concat(*point_arrays) if len(point_arrays) > 1 else point_arrays[0]
         ).alias("_p"),
     )
     p = F.col("_p")
     return pts.select(
-        _attr(F.col("_res_attrs"), "service.name").alias("service_name"),
+        *_resource("metrics"),
         "scope_name",
         "scope_version",
         "metric_name",
@@ -1059,16 +778,10 @@ def parse_otlp_metrics_json(
         "temporality",
         "is_monotonic",
         p["t"].cast("long").alias("time_unix_nano"),
-        p["value"].alias("value"),
-        p["count"].alias("count"),
-        p["sum"].alias("sum_value"),
-        p["bucket_counts"].alias("bucket_counts"),
-        p["explicit_bounds"].alias("explicit_bounds"),
-        p["scale"].alias("scale"),
-        p["zero_count"].alias("zero_count"),
-        p["pos_offset"].alias("pos_offset"),
-        p["pos_bucket_counts"].alias("pos_bucket_counts"),
-        p["quantiles"].alias("quantiles"),
+        *[
+            p[f.name].alias("sum_value" if f.name == "sum" else f.name)
+            for f in _POINT.fields[1:-1]
+        ],
         _attr(p["attrs"], "host.name").alias("host_name"),
         _attr(p["attrs"], "point.seq").cast("long").alias("point_seq"),
     )
@@ -1077,51 +790,103 @@ def parse_otlp_metrics_json(
 # --- encode (exporter side) ---------------------------------------------------
 
 
-def encode_otlp_json(
+def _kv(key, string: Column | None = None, int: Column | None = None) -> Column:
+    """A KeyValue struct; the AnyValue branch left None is NULL, which
+    ``to_json`` omits from the wire."""
+    null = F.lit(None).cast("string")
+    return F.struct(
+        (F.lit(key) if isinstance(key, str) else key).alias("key"),
+        F.struct(
+            (null if string is None else string).alias("stringValue"),
+            (null if int is None else int).alias("intValue"),
+        ).alias("value"),
+    )
+
+
+def _encode(
     df: DataFrame,
-    n_buckets: int = 64,
-    int_attr_keys: tuple[str, ...] = ("event.index",),
+    signal: str,
+    item: Column,
+    bucket_of: str,
+    group: tuple[str, ...] = (),
+    items=lambda collected: collected,
 ) -> DataFrame:
+    """Flat rows → one ``payload`` per (resource, scope, ``group``,
+    bucket): ``item`` is built per row, ``collect_list``ed per request,
+    mapped by ``items`` and nested under the scope and the resource by
+    ``to_json``. The bucket — a stable hash of ``bucket_of`` —
+    bounds request size; the groupBy is the exporter's batching shuffle,
+    the ONE shuffle an encode needs at any scale."""
+    res_key, scope_key, items_key = _ENVELOPE[signal]
+    resource = _RESOURCE_ATTRS[signal]
+    grouped = (
+        df.withColumn("_item", item)
+        .withColumn(
+            "_bucket", F.pmod(F.xxhash64(bucket_of), F.lit(ENCODE_BUCKETS))
+        )
+        .groupBy(
+            *[c for _, c in resource], "scope_name", "scope_version", *group,
+            "_bucket",
+        )
+        .agg(F.collect_list("_item").alias("_items"))
+    )
+    scope = F.struct(
+        F.struct(
+            F.col("scope_name").alias("name"),
+            F.col("scope_version").alias("version"),
+        ).alias("scope"),
+        items(F.col("_items")).alias(items_key),
+    )
+    request = F.struct(
+        F.array(
+            F.struct(
+                F.struct(
+                    F.array(*[_kv(k, string=F.col(c)) for k, c in resource]).alias(
+                        "attributes"
+                    )
+                ).alias("resource"),
+                F.array(scope).alias(scope_key),
+            )
+        ).alias(res_key)
+    )
+    return grouped.select(F.to_json(request).alias(PAYLOAD_COL))
+
+
+def encode_otlp_json(df: DataFrame) -> DataFrame:
     """Inverse of :func:`parse_otlp_json`: flat log rows back to OTLP/JSON
     ExportLogsServiceRequest payloads — the exporter half of the protocol
     (go/pkg/otel/logs/otlp/logs.go is the reference's columnar→OTLP
     inverse; this is the same re-nesting with Catalyst building the
     batches). One request per (resource attributes, scope, bucket): rows
     sharing a resource+scope re-batch together, the bucket (a stable hash
-    of the timestamp) bounding request size — exactly the exporter's
-    batching shuffle, the ONE shuffle this op needs at any scale.
+    of the timestamp) bounding request size.
 
     Proto3 JSON fidelity: int64s re-serialize as strings (`timeUnixNano`
     stays the string form of the BIGINT), AnyValue branches are rebuilt
-    from the flat map (`int_attr_keys` go back to ``intValue``, the rest
-    to ``stringValue``), and absent-on-the-wire fields (NULL trace ids,
-    zero droppedAttributesCount) are omitted again because ``to_json``
-    drops NULL fields — so parse∘encode∘parse is row-identical even
-    though record order inside a payload is nondeterministic
-    (collect_list order).
+    from the flat map (``LOG_INT_ATTR_KEYS`` go back to ``intValue``, the
+    rest to ``stringValue``), and absent-on-the-wire fields (NULL trace
+    ids, zero droppedAttributesCount) are omitted again because
+    ``to_json`` drops NULL fields — so parse∘encode∘parse is
+    row-identical even though record order inside a payload is
+    nondeterministic (collect_list order).
 
     Returns a DataFrame with a single ``payload`` string column.
     """
-    attr_entries = F.transform(
-        F.map_entries(F.col("attributes")),
-        lambda e: F.struct(
-            e["key"].alias("key"),
-            F.struct(
-                F.when(~e["key"].isin(*int_attr_keys), e["value"]).alias(
-                    "stringValue"
-                ),
-                F.when(e["key"].isin(*int_attr_keys), e["value"]).alias(
-                    "intValue"
-                ),
-            ).alias("value"),
-        ),
-    )
+
+    def attr(e):
+        is_int = e["key"].isin(*LOG_INT_ATTR_KEYS)
+        return _kv(
+            e["key"],
+            string=F.when(~is_int, e["value"]),
+            int=F.when(is_int, e["value"]),
+        )
+
     record = F.struct(
         F.col("time_unix_nano").cast("string").alias("timeUnixNano"),
         F.col("severity_number").alias("severityNumber"),
         F.col("severity_text").alias("severityText"),
         F.struct(F.col("body").alias("stringValue")).alias("body"),
-        attr_entries.alias("attributes"),
+        F.transform(F.map_entries(F.col("attributes")), attr).alias("attributes"),
         F.col("trace_id").alias("traceId"),
         F.col("span_id").alias("spanId"),
         F.when(
@@ -1129,51 +894,10 @@ def encode_otlp_json(
             F.col("dropped_attributes_count"),
         ).alias("droppedAttributesCount"),
     )
-
-    def _kv(key: str, val):
-        return F.struct(
-            F.lit(key).alias("key"),
-            F.struct(val.alias("stringValue")).alias("value"),
-        )
-
-    grouped = (
-        df.withColumn("_rec", record)
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64("time_unix_nano"), F.lit(n_buckets))
-        )
-        .groupBy(
-            "service_name", "environment", "scope_name", "scope_version",
-            "_bucket",
-        )
-        .agg(F.collect_list("_rec").alias("_recs"))
-    )
-    payload = F.to_json(
-        F.struct(
-            F.array(
-                F.struct(
-                    F.struct(
-                        F.array(
-                            _kv("service.name", F.col("service_name")),
-                            _kv("deployment.environment", F.col("environment")),
-                        ).alias("attributes")
-                    ).alias("resource"),
-                    F.array(
-                        F.struct(
-                            F.struct(
-                                F.col("scope_name").alias("name"),
-                                F.col("scope_version").alias("version"),
-                            ).alias("scope"),
-                            F.col("_recs").alias("logRecords"),
-                        )
-                    ).alias("scopeLogs"),
-                )
-            ).alias("resourceLogs")
-        )
-    )
-    return grouped.select(payload.alias("payload"))
+    return _encode(df, "logs", record, "time_unix_nano")
 
 
-def encode_otlp_traces_json(df: DataFrame, n_buckets: int = 64) -> DataFrame:
+def encode_otlp_traces_json(df: DataFrame) -> DataFrame:
     """Inverse of :func:`parse_otlp_traces_json`: flat span rows back to
     OTLP/JSON ExportTraceServiceRequest payloads — the traces twin of
     :func:`encode_otlp_json` (go/pkg/otel/traces/otlp is the reference's
@@ -1195,20 +919,8 @@ def encode_otlp_traces_json(df: DataFrame, n_buckets: int = 64) -> DataFrame:
         F.col("start_unix_nano").cast("string").alias("startTimeUnixNano"),
         F.col("end_unix_nano").cast("string").alias("endTimeUnixNano"),
         F.array(
-            F.struct(
-                F.lit("peer.service").alias("key"),
-                F.struct(
-                    F.col("peer_service").alias("stringValue"),
-                    F.lit(None).cast("string").alias("intValue"),
-                ).alias("value"),
-            ),
-            F.struct(
-                F.lit("span.seq").alias("key"),
-                F.struct(
-                    F.lit(None).cast("string").alias("stringValue"),
-                    F.col("span_seq").cast("string").alias("intValue"),
-                ).alias("value"),
-            ),
+            _kv("peer.service", string=F.col("peer_service")),
+            _kv("span.seq", int=F.col("span_seq").cast("string")),
         ).alias("attributes"),
         F.struct(
             F.when(F.col("status_code") != 0, F.col("status_code")).alias(
@@ -1217,45 +929,10 @@ def encode_otlp_traces_json(df: DataFrame, n_buckets: int = 64) -> DataFrame:
             F.col("status_message").alias("message"),
         ).alias("status"),
     )
-    grouped = (
-        df.withColumn("_rec", record)
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64("trace_id"), F.lit(n_buckets))
-        )
-        .groupBy("service_name", "scope_name", "scope_version", "_bucket")
-        .agg(F.collect_list("_rec").alias("_recs"))
-    )
-    payload = F.to_json(
-        F.struct(
-            F.array(
-                F.struct(
-                    F.struct(
-                        F.array(
-                            F.struct(
-                                F.lit("service.name").alias("key"),
-                                F.struct(
-                                    F.col("service_name").alias("stringValue")
-                                ).alias("value"),
-                            )
-                        ).alias("attributes")
-                    ).alias("resource"),
-                    F.array(
-                        F.struct(
-                            F.struct(
-                                F.col("scope_name").alias("name"),
-                                F.col("scope_version").alias("version"),
-                            ).alias("scope"),
-                            F.col("_recs").alias("spans"),
-                        )
-                    ).alias("scopeSpans"),
-                )
-            ).alias("resourceSpans")
-        )
-    )
-    return grouped.select(payload.alias("payload"))
+    return _encode(df, "traces", record, "trace_id")
 
 
-def encode_otlp_metrics_json(df: DataFrame, n_buckets: int = 64) -> DataFrame:
+def encode_otlp_metrics_json(df: DataFrame) -> DataFrame:
     """Inverse of :func:`parse_otlp_metrics_json`: flat data-point rows
     back to OTLP/JSON ExportMetricsServiceRequest payloads across all
     five Metric oneof branches — completing the bidirectional OTLP
@@ -1270,121 +947,43 @@ def encode_otlp_metrics_json(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     FLAT rows round-trip exactly (doubles are lossless for |v| < 2^53,
     and OTLP consumers treat the two branches as the same number).
     """
-    is_num = F.col("metric_type").isin("gauge", "sum")
-    is_hist = F.col("metric_type") == "histogram"
-    is_exp = F.col("metric_type") == "exp_histogram"
-    is_summary = F.col("metric_type") == "summary"
-    _sn = F.lit(None).cast("string")
-
+    t = F.col("metric_type")
     point = F.struct(
         F.col("time_unix_nano").cast("string").alias("timeUnixNano"),
-        F.when(is_num, F.col("value")).alias("asDouble"),
-        F.when(~is_num, F.col("count").cast("string")).alias("count"),
-        F.when(~is_num, F.col("sum_value")).alias("sum"),
-        F.when(
-            is_hist,
-            F.transform(F.col("bucket_counts"), lambda c: c.cast("string")),
-        ).alias("bucketCounts"),
-        F.when(is_hist, F.col("explicit_bounds")).alias("explicitBounds"),
-        F.when(is_exp, F.col("scale")).alias("scale"),
-        F.when(is_exp, F.col("zero_count").cast("string")).alias("zeroCount"),
-        F.when(
-            is_exp,
-            F.struct(
-                F.col("pos_offset").alias("offset"),
-                F.transform(
-                    F.col("pos_bucket_counts"), lambda c: c.cast("string")
-                ).alias("bucketCounts"),
-            ),
-        ).alias("positive"),
-        F.when(is_summary, F.col("quantiles")).alias("quantileValues"),
+        *[
+            F.when(
+                t.isin(*[b.name for b in _BRANCHES if f.key in b.points]),
+                f.encode(),
+            ).alias(f.key)
+            for f in _POINT_FIELDS
+            if f.encode is not None
+        ],
         F.array(
-            F.struct(
-                F.lit("host.name").alias("key"),
-                F.struct(
-                    F.col("host_name").alias("stringValue"),
-                    _sn.alias("intValue"),
-                ).alias("value"),
-            ),
-            F.struct(
-                F.lit("point.seq").alias("key"),
-                F.struct(
-                    _sn.alias("stringValue"),
-                    F.col("point_seq").cast("string").alias("intValue"),
-                ).alias("value"),
-            ),
+            _kv("host.name", string=F.col("host_name")),
+            _kv("point.seq", int=F.col("point_seq").cast("string")),
         ).alias("attributes"),
     )
-    grouped = (
-        df.withColumn("_pt", point)
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64("time_unix_nano"), F.lit(n_buckets))
-        )
-        .groupBy(
-            "service_name", "scope_name", "scope_version", "metric_name",
-            "metric_unit", "metric_type", "temporality", "is_monotonic",
-            "_bucket",
-        )
-        .agg(F.collect_list("_pt").alias("_pts"))
-    )
-    t = F.col("metric_type")
-    metric = F.struct(
-        F.col("metric_name").alias("name"),
-        F.col("metric_unit").alias("unit"),
-        F.when(t == "gauge", F.struct(F.col("_pts").alias("dataPoints"))).alias(
-            "gauge"
-        ),
-        F.when(
-            t == "sum",
+
+    def metric(pts: Column) -> Column:
+        def branch(b: _Branch) -> Column:
+            data = [pts.alias(_DATA_POINTS)]
+            if b.temporality:
+                data.append(F.col("temporality").alias(_TEMPORALITY))
+            if b.monotonic:
+                data.append(F.col("is_monotonic").alias(_MONOTONIC))
+            return F.when(t == b.name, F.struct(*data)).alias(b.field)
+
+        return F.array(
             F.struct(
-                F.col("_pts").alias("dataPoints"),
-                F.col("temporality").alias("aggregationTemporality"),
-                F.col("is_monotonic").alias("isMonotonic"),
-            ),
-        ).alias("sum"),
-        F.when(
-            t == "histogram",
-            F.struct(
-                F.col("_pts").alias("dataPoints"),
-                F.col("temporality").alias("aggregationTemporality"),
-            ),
-        ).alias("histogram"),
-        F.when(
-            t == "exp_histogram",
-            F.struct(
-                F.col("_pts").alias("dataPoints"),
-                F.col("temporality").alias("aggregationTemporality"),
-            ),
-        ).alias("exponentialHistogram"),
-        F.when(
-            t == "summary", F.struct(F.col("_pts").alias("dataPoints"))
-        ).alias("summary"),
-    )
-    payload = F.to_json(
-        F.struct(
-            F.array(
-                F.struct(
-                    F.struct(
-                        F.array(
-                            F.struct(
-                                F.lit("service.name").alias("key"),
-                                F.struct(
-                                    F.col("service_name").alias("stringValue")
-                                ).alias("value"),
-                            )
-                        ).alias("attributes")
-                    ).alias("resource"),
-                    F.array(
-                        F.struct(
-                            F.struct(
-                                F.col("scope_name").alias("name"),
-                                F.col("scope_version").alias("version"),
-                            ).alias("scope"),
-                            F.array(metric).alias("metrics"),
-                        )
-                    ).alias("scopeMetrics"),
-                )
-            ).alias("resourceMetrics")
+                F.col("metric_name").alias("name"),
+                F.col("metric_unit").alias("unit"),
+                *[branch(b) for b in _BRANCHES],
+            )
         )
+
+    return _encode(
+        df, "metrics", point, "time_unix_nano",
+        group=("metric_name", "metric_unit", "metric_type", "temporality",
+               "is_monotonic"),
+        items=metric,
     )
-    return grouped.select(payload.alias("payload"))

@@ -531,32 +531,6 @@ def stream_snapshot_sink(
     return writer.start()
 
 
-def stream_otlp_json_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming OTLP/JSON ingestion: a parquet file-stream of
-    ExportLogsServiceRequest payloads (the sandbox stand-in for the
-    reference's OTLP HTTP receiver — receivers/otlp_receiver/mod.rs; a
-    collector writing request bodies into a landing directory is the
-    same contract) → parse_otlp_json → flat LogRecord parquet.
-
-    The batch decoder runs UNMODIFIED on the stream: from_json + explodes
-    are stateless narrow expressions, so the micro-batch plan is the
-    batch plan — no state store, no watermark, exactly-once via the file
-    sink's commit log. At 100 TB this is the continuous-ingest front of
-    the pipeline: each arriving request file decodes in place, no
-    shuffle anywhere.
-    """
-    return stream_otlp_decode(
-        spark, input_dir, output_dir, checkpoint_dir,
-        signal="logs", available_now=available_now,
-    )
-
-
 def stream_otlp_decode(
     spark: SparkSession,
     input_dir: str,
@@ -565,7 +539,10 @@ def stream_otlp_decode(
     signal: str = "logs",
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Signal-generic streaming OTLP/JSON decode: ``signal`` picks the
+    """Streaming OTLP/JSON decode: a parquet file-stream of request
+    payloads (the stand-in for the reference's OTLP HTTP receiver; a
+    collector writing request bodies into a landing directory is the same
+    contract) → flat rows. ``signal`` picks the
     logs / traces / metrics parser; the rest is identical because every
     decoder is a stateless narrow expression chain — the batch plan IS
     the micro-batch plan for all three (the reference's per-signal

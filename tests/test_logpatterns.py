@@ -391,7 +391,7 @@ class TestOtlpEncode:
         reqs = generate_otlp_json_requests(400)
         df = spark.createDataFrame([(p,) for p in reqs], "payload string")
         flat = parse_otlp_json(df)
-        rt = parse_otlp_json(encode_otlp_json(flat, n_buckets=8))
+        rt = parse_otlp_json(encode_otlp_json(flat))
         key = lambda r: r.event_index  # noqa: E731
         a = sorted(flat.collect(), key=key)
         b = sorted(rt.collect(), key=key)
@@ -450,7 +450,7 @@ class TestOtlpTracesEncode:
         reqs = generate_otlp_json_trace_requests(300)
         df = spark.createDataFrame([(p,) for p in reqs], "payload string")
         flat = parse_otlp_traces_json(df)
-        payloads = encode_otlp_traces_json(flat, n_buckets=8).collect()
+        payloads = encode_otlp_traces_json(flat).collect()
         rt = parse_otlp_traces_json(
             spark.createDataFrame(payloads, "payload string")
         )
@@ -482,7 +482,7 @@ class TestOtlpMetricsEncode:
         reqs = generate_otlp_json_metric_requests(400)
         df = spark.createDataFrame([(p,) for p in reqs], "payload string")
         flat = parse_otlp_metrics_json(df)
-        rt = parse_otlp_metrics_json(encode_otlp_metrics_json(flat, n_buckets=8))
+        rt = parse_otlp_metrics_json(encode_otlp_metrics_json(flat))
         key = lambda r: (r.point_seq, r.metric_type)  # noqa: E731
         a = sorted(flat.collect(), key=key)
         b = sorted(rt.collect(), key=key)

@@ -17,7 +17,7 @@ from otel_arrow_spark.operators.attributes import (
     explode_attrs,
 )
 from otel_arrow_spark.operators.filter import MatchRules, cascade_filter, filter_processor
-from otel_arrow_spark.operators.flow import conditional_branches, fork
+from otel_arrow_spark.operators.flow import conditional_branches
 from otel_arrow_spark.operators.route import route_by_value
 from otel_arrow_spark.operators.sample import ratio_sample, zip_sample
 
@@ -359,12 +359,6 @@ class TestFlow:
         assert got == {0: "lo", 1: "lo", 2: "lo", 3: "mid", 4: "mid", 5: "mid",
                        6: "hi", 7: "hi", 8: "hi", 9: "hi"}
         assert out.count() == 10  # no row lost or duplicated
-
-    def test_fork_duplicates(self, spark):
-        df = spark.createDataFrame([(1,), (2,)], "x int")
-        outs = fork(df, [lambda d: d.filter("x=1"), lambda d: d.filter("x>=1")])
-        assert [o.count() for o in outs] == [1, 2]
-        df.unpersist()
 
 
 class TestTemporalJoin:

@@ -440,7 +440,7 @@ def test_stream_otlp_json_matches_batch(spark, workdir):
         generate_otlp_json_requests,
         parse_otlp_json,
     )
-    from otel_arrow_spark.streaming.jobs import stream_otlp_json_ingest
+    from otel_arrow_spark.streaming.jobs import stream_otlp_decode
     from tests.conftest import assert_df_equal
 
     reqs = generate_otlp_json_requests(400)
@@ -451,8 +451,9 @@ def test_stream_otlp_json_matches_batch(spark, workdir):
         pq.write_table(pa.table({"payload": chunk}), f"{indir}/part-{i}.parquet")
 
     out = f"{workdir}/otlp_stream_out"
-    q = stream_otlp_json_ingest(
-        spark, indir, out, f"{workdir}/otlp_ckpt", available_now=True
+    q = stream_otlp_decode(
+        spark, indir, out, f"{workdir}/otlp_ckpt", signal="logs",
+        available_now=True,
     )
     q.awaitTermination(300)
     got = spark.read.parquet(f"{out}/otlp_logs")
