@@ -125,11 +125,8 @@ def enrich(df: DataFrame, spark: SparkSession | None = None) -> DataFrame:
     """
     spark = spark or df.sparkSession
     out = enrich_with_dict(df, role_dict_df(spark), "role")
-    tool_key = (
-        F.coalesce(F.col("tool_called"), F.col("tool"))
-        if "tool_called" in df.columns
-        else F.col("tool")
-    )
-    out = out.withColumn("tool_key", tool_key)
-    dim = tool_dict_df(spark).withColumnRenamed("tool", "tool_key")
-    return out.join(F.broadcast(dim), on="tool_key", how="left").drop("tool_key")
+    dim = tool_dict_df(spark)
+    key = out["tool"]
+    if "tool_called" in df.columns:
+        key = F.coalesce(out["tool_called"], key)
+    return out.join(F.broadcast(dim), key == dim["tool"], "left").drop(dim["tool"])

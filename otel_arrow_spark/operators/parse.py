@@ -150,14 +150,17 @@ def parse_transcripts(df: DataFrame, text_col: str = "text") -> DataFrame:
     _parse_batch.__annotations__ = {"text": pd.Series, "return": pd.DataFrame}
     parse_udf = pandas_udf(_PARSED_STRUCT)(_parse_batch)
 
-    out = df.withColumn("_parsed", parse_udf(F.col(text_col)))
-    for name, _ in PARSED_FIELDS:
-        out = out.withColumn(name, F.col(f"_parsed.{name}"))
-    out = out.drop("_parsed")
-    out = out.withColumn("severity_number", severity_number_col(F.col("severity_text")))
-    return out.withColumn(
-        "is_parsed",
-        F.col("severity_text").isNotNull()
-        | F.col("tool_called").isNotNull()
-        | F.col("trace_id").isNotNull(),
+    # Two selects: the UDF's struct, then every output column from it
+    # (a withColumn per field would re-analyse the plan thirteen times).
+    out = df.select("*", parse_udf(F.col(text_col)).alias("_parsed"))
+    field = {name: F.col(f"_parsed.{name}") for name, _ in PARSED_FIELDS}
+    return out.select(
+        *df.columns,
+        *[c.alias(name) for name, c in field.items()],
+        severity_number_col(field["severity_text"]).alias("severity_number"),
+        (
+            field["severity_text"].isNotNull()
+            | field["tool_called"].isNotNull()
+            | field["trace_id"].isNotNull()
+        ).alias("is_parsed"),
     )

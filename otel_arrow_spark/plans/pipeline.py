@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from otel_arrow_spark.operators.aggregate import sink_aggregate
 from otel_arrow_spark.operators.enrich import enrich
 from otel_arrow_spark.operators.parse import parse_transcripts
-from otel_arrow_spark.operators.route import SIGNAL_CLASSES, with_signal_class
+from otel_arrow_spark.operators.route import SIGNAL_CLASSES, signal_class_col
 from otel_arrow_spark.sinks import SINK_PARQUET_OPTIONS
 
 SINK_COLUMNS = [
@@ -95,9 +95,8 @@ def build_routed(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     df = spark.read.parquet(cfg.input_path)
     if cfg.repartition is not None:
         df = df.repartition(cfg.repartition)
-    parsed = parse_transcripts(df)
-    enriched = enrich(parsed, spark)
-    return with_signal_class(enriched).select(*SINK_COLUMNS)
+    enriched = enrich(parse_transcripts(df), spark)
+    return enriched.select(*SINK_COLUMNS[:-1], signal_class_col().alias("signal_class"))
 
 
 def _marker(path: str) -> str:
@@ -174,7 +173,9 @@ def run_pipeline(
     agg_root = os.path.join(cfg.output_dir, "agg")
     if not (resume and _committed(agg_root)):
         t0 = time.monotonic()
-        routed_df = spark.read.parquet(routed_path)
+        # the routed files hold the routed frame's own schema: no
+        # inference job over their footers
+        routed_df = spark.read.schema(routed.schema).parquet(routed_path)
         agg = sink_aggregate(routed_df, ("signal_class", *cfg.agg_keys))
         (
             agg.write.mode("overwrite")

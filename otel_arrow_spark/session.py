@@ -20,7 +20,9 @@ from pyspark.sql import types as T
 # Tuned for the sandbox (local[32], 128 GiB). On a real cluster these are
 # overridden by spark-submit conf; the session-level defaults below are the
 # ones that matter for plan shape (AQE, broadcast threshold, Arrow batching),
-# not sizing.
+# not sizing. The code's side of plan shape: each layer builds its output
+# with one ``select``, not a ``withColumn`` loop, because every
+# ``withColumn`` re-analyses the whole plan built so far.
 _PLAN_SHAPE_CONF = {
     # AQE: runtime partition coalescing + skew-join splitting. This is the
     # Spark-native answer to the reference's batch split/concatenate kernels
@@ -36,7 +38,15 @@ _PLAN_SHAPE_CONF = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     # Deterministic timestamp semantics.
     "spark.sql.session.timeZone": "UTC",
+    # Python workers fork from otel_arrow_spark/pyworker.py, PySpark's
+    # daemon minus the per-task re-read of every zip archive on the
+    # worker's path (150-280 ms per UDF task); get_spark puts the package
+    # root on the workers' PYTHONPATH so the daemon can import it.
+    "spark.python.daemon.module": "otel_arrow_spark.pyworker",
 }
+
+# The directory that holds the ``otel_arrow_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -74,6 +84,7 @@ def get_spark(
 
     for k, v in _PLAN_SHAPE_CONF.items():
         builder = builder.config(k, v)
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

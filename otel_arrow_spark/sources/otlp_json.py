@@ -906,9 +906,12 @@ def encode_otlp_traces_json(df: DataFrame) -> DataFrame:
     (trace-coherent batching, what a tail-sampling exporter needs), with
     the bucket bounding request size. Same single batching shuffle.
 
-    Proto3 fidelity: NULL parentSpanId (roots) and empty status messages
-    are omitted from the wire; status is re-nested; the span attributes
-    are rebuilt from the typed flat columns.
+    Proto3 fidelity: NULL fields are omitted from the wire, so a root
+    span has no parentSpanId. Status is re-nested as ``{"code", "message"}``
+    with code 0 (UNSET) and a NULL message omitted, which leaves
+    ``"status":{}`` on a span with neither; an empty-string message is
+    written as ``""``. The span attributes are rebuilt from the typed
+    flat columns.
     """
     record = F.struct(
         F.col("trace_id").alias("traceId"),

@@ -568,15 +568,11 @@ def simhash_near_dup_pairs(
     them (an exact guarantee, so the output equals an all-pairs hamming
     scan — which is what the driver's DuckDB oracle computes when
     ``token_hash="md5"``). Verification = exact hamming ≤ max_hamming."""
-    from pyspark import StorageLevel
-
-    # persist the (id, simhash) pairs: the token-hash + signed-bit-sum
-    # signature pipeline would otherwise execute once per self-join side
-    # (16 bytes/doc — the same ids-only caching rule as the MinHash
-    # banding persist above)
-    sims = simhash_col(
-        df, text_col, id_col, bits=bits, token_hash=token_hash
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # not persisted: the pairs are returned lazily, so no action in here
+    # could release a cache. Once the self-join shuffles both sides, they
+    # are one reused exchange and the signature UDF runs once; below the
+    # broadcast threshold it runs once per side over a small table.
+    sims = simhash_col(df, text_col, id_col, bits=bits, token_hash=token_hash)
     chunk_bits = bits // n_chunks
     mask = (1 << chunk_bits) - 1
     chunks = sims.select(
@@ -736,31 +732,19 @@ def semantic_dedup(
     on the same side in any engine replaying the plan (the DuckDB oracle
     uses the identical round-then-compare).
 
-    ``assigned`` (optional): a pre-materialized (id, vec, cluster_id)
-    frame — at corpus scale write the assignment ONCE with
-    ``ivf.write_ivf_index`` and pass the read-back here; the plan below
-    references the assignment three times (both join sides + the
-    survivor base), so an unmaterialized mapInPandas assignment would
-    re-run its BLAS scan per reference.
+    The plan references the assignment three times (both join sides +
+    the survivor base) and does not cache it, because the survivors are
+    returned lazily and nothing here could release a cache: once the
+    join shuffles, its two sides share one exchange and the survivor
+    base scans again. At corpus scale write the assignment ONCE with
+    ``ivf.write_ivf_index`` and dedup the read-back with
+    :func:`semantic_dedup_on_index`.
     """
-    return _semantic_dedup_on(
-        _assign_for_dedup(corpus, centroids, vec_col, id_col),
-        threshold, vec_col, id_col,
-    )
-
-
-def _assign_for_dedup(corpus, centroids, vec_col, id_col):
-    from pyspark import StorageLevel
-
     from otel_arrow_spark.textops.ivf import assign_clusters
 
-    # the dedup plan references the assignment three times (both pair
-    # sides + the survivor base): persist so the mapInPandas BLAS scan
-    # runs once per job instead of once per reference (the docstring's
-    # write_ivf_index advice is the durable-index form of the same rule;
-    # this is the transient-index form, guide §1.2)
-    return assign_clusters(corpus, centroids, vec_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    return _semantic_dedup_on(
+        assign_clusters(corpus, centroids, vec_col, id_col),
+        threshold, vec_col, id_col,
     )
 
 

@@ -23,6 +23,54 @@ def result(spark, tiny_transcripts, workdir):
     )
 
 
+# Output schemas of the pipeline's layers: names, order and types, which
+# the __spark_entry__ queries and the routed sink's readers rely on.
+_TRANSCRIPT = [
+    ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
+    ("text", "string"), ("tool", "string"), ("ts", "timestamp_ntz"),
+]
+_PARSED = [
+    ("severity_text", "string"), ("component", "string"), ("message", "string"),
+    ("tool_called", "string"), ("args_len", "int"), ("call_status", "string"),
+    ("duration_ms", "int"), ("trace_id", "string"), ("span_id", "string"),
+    ("event_name", "string"), ("severity_number", "int"), ("is_parsed", "boolean"),
+]
+_DICT = [
+    ("role_class", "string"), ("is_human", "boolean"), ("tool_family", "string"),
+    ("risk_tier", "string"), ("owner", "string"),
+]
+LAYER_SCHEMAS = {
+    "parse": _TRANSCRIPT + _PARSED,
+    # the role join is a using-join, so its key leads
+    "enrich": [("role", "string")] + [c for c in _TRANSCRIPT if c[0] != "role"]
+    + _PARSED + _DICT,
+    "routed": _TRANSCRIPT + [
+        ("severity_text", "string"), ("severity_number", "int"),
+        ("component", "string"), ("tool_called", "string"), ("args_len", "int"),
+        ("call_status", "string"), ("duration_ms", "int"), ("trace_id", "string"),
+        ("span_id", "string"), ("event_name", "string"), ("is_parsed", "boolean"),
+    ] + _DICT + [("signal_class", "string")],
+}
+
+
+def test_layer_output_schemas_are_pinned(spark, tiny_transcripts, workdir):
+    from otel_arrow_spark.operators.enrich import enrich
+    from otel_arrow_spark.operators.parse import parse_transcripts
+    from otel_arrow_spark.plans.pipeline import build_routed
+
+    df = spark.read.parquet(tiny_transcripts)
+    frames = {
+        "parse": parse_transcripts(df),
+        "enrich": enrich(parse_transcripts(df), spark),
+        "routed": build_routed(
+            spark, PipelineConfig(input_path=tiny_transcripts, output_dir=f"{workdir}/unused")
+        ),
+    }
+    for layer, frame in frames.items():
+        got = [(f.name, f.dataType.simpleString()) for f in frame.schema.fields]
+        assert got == LAYER_SCHEMAS[layer], layer
+
+
 def test_lineage_accounts_for_every_row(result):
     m = result.manifest["metrics"]
     assert m["rows_in"] == TINY_TURNS

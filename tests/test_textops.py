@@ -792,6 +792,23 @@ class TestPacking:
         assert {tuple(r) for r in a} == {tuple(r) for r in b}
 
 
+def test_near_dup_calls_leave_nothing_cached(spark, docs, embeddings):
+    """simhash_near_dup_pairs and semantic_dedup return lazy frames:
+    consuming two calls of each, on different inputs, leaves no more
+    persistent RDDs than before."""
+    from otel_arrow_spark.textops.dedup import semantic_dedup
+    from otel_arrow_spark.textops.ivf import deterministic_centroids
+
+    jsc = spark.sparkContext._jsc
+    before = len(jsc.getPersistentRDDs())
+    for keep in (0, 1):
+        d = docs.where(F.col("doc_id") % 2 >= keep)
+        simhash_near_dup_pairs(d, max_hamming=3).collect()
+        e = embeddings.where(F.col("vec_id") % 2 >= keep)
+        semantic_dedup(e, deterministic_centroids(e, 4), 0.42).collect()
+        assert len(jsc.getPersistentRDDs()) == before
+
+
 class TestSemanticDedup:
     def test_cluster_scoped_keep_first(self, spark):
         """Within a cluster the lower id survives; a near-identical pair
