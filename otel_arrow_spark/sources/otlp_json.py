@@ -22,6 +22,12 @@ all build that envelope through it. The five-branch Metric `data` oneof
 is likewise one table, `_BRANCHES`, over one data-point field table,
 `_POINT_FIELDS`.
 
+Every decode and encode expression is SQL text, built once at import
+from those tables (the metrics decode once per ``branches`` choice). A
+decode is one `selectExpr` per nesting level and an encode one
+`selectExpr`, one groupBy/agg and one `selectExpr`, so building a plan
+costs a few py4j calls per layer, not one per expression node.
+
 Proto3 JSON mapping notes baked into the schemas (public protobuf spec):
 * field names are lowerCamelCase (`resourceLogs`, `timeUnixNano`);
 * int64/uint64 (`timeUnixNano`, AnyValue `intValue`, `count`, …) arrive
@@ -37,12 +43,13 @@ DuckDB oracle read, so cross-engine comparison sees identical bytes.
 
 from __future__ import annotations
 
+import functools
 import json
-from typing import Callable, NamedTuple
+from typing import NamedTuple
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -415,24 +422,52 @@ OTLP_EXPORT_TRACES_SCHEMA = _envelope_schema(
 )
 
 
-def _as_long(c: Column) -> Column:
-    return c.cast("long")
+# --- SQL text -------------------------------------------------------------------
+# The builders of the codec's SQL text (module docstring: why text).
 
 
-def _as_string(c: Column) -> Column:
-    return c.cast("string")
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _named_struct(*fields: tuple[str, str]) -> str:
+    """``named_struct`` of (name, SQL expression) pairs, in order."""
+    return "named_struct(" + ", ".join(f"{_lit(k)}, {v}" for k, v in fields) + ")"
+
+
+# The value of a KeyValue ``a``: string branch first, int branch as fallback
+# (the corpus never uses both on one key).
+_ANY = "coalesce(a.value.stringValue, a.value.intValue)"
+
+
+def _attr(entries: str, key: str) -> str:
+    """First value for ``key`` in the KeyValue list ``entries``; the
+    filter runs once per row, and ``get`` (not ``[0]``) makes an absent
+    key or an empty list NULL instead of an ANSI INVALID_ARRAY_INDEX
+    error."""
+    return f"get(transform(filter({entries}, a -> a.key = {_lit(key)}), a -> {_ANY}), 0)"
+
+
+def _cast_each(arr: str, to: str) -> str:
+    return f"transform({arr}, x -> CAST(x AS {to}))"
 
 
 class _PointField(NamedTuple):
     """One data-point wire field, between ``timeUnixNano`` and
     ``attributes``: its JSON key and read type, the common point fields
-    it decodes to — (name, type, wire point → value) — and its encoding
-    from the flat row (None: decode-only)."""
+    it decodes to — (name, type, SQL over the wire point ``p``) — and its
+    SQL encoding from the flat row (None: decode-only)."""
 
     key: str
     wire_type: T.DataType
-    decode: tuple[tuple[str, T.DataType, Callable[[Column], Column]], ...]
-    encode: Callable[[], Column] | None
+    decode: tuple[tuple[str, T.DataType, str], ...]
+    encode: str | None
 
 
 _QUANTILES = T.ArrayType(_struct(quantile=_DBL, value=_DBL))
@@ -440,59 +475,49 @@ _QUANTILES = T.ArrayType(_struct(quantile=_DBL, value=_DBL))
 _POINT_FIELDS = (
     _PointField(
         "asDouble", _DBL,
-        (("value", _DBL,
-          lambda p: F.coalesce(p["asDouble"], p["asInt"].cast("double"))),),
-        lambda: F.col("value"),
+        (("value", _DBL, "coalesce(p.asDouble, CAST(p.asInt AS DOUBLE))"),),
+        "`value`",
     ),
     # the parse folds asInt into `value`; encoders write asDouble only
     _PointField("asInt", _STR, (), None),  # uint64 → JSON string
     _PointField(
         "count", _STR,
-        (("count", _LONG, lambda p: p["count"].cast("long")),),
-        lambda: F.col("count").cast("string"),
+        (("count", _LONG, "CAST(p.`count` AS BIGINT)"),),
+        "CAST(`count` AS STRING)",
     ),
-    _PointField(
-        "sum", _DBL,
-        (("sum", _DBL, lambda p: p["sum"]),),
-        lambda: F.col("sum_value"),
-    ),
+    _PointField("sum", _DBL, (("sum", _DBL, "p.`sum`"),), "sum_value"),
     _PointField(
         "bucketCounts", T.ArrayType(_STR),
-        (("bucket_counts", T.ArrayType(_LONG),
-          lambda p: F.transform(p["bucketCounts"], _as_long)),),
-        lambda: F.transform(F.col("bucket_counts"), _as_string),
+        (("bucket_counts", T.ArrayType(_LONG), _cast_each("p.bucketCounts", "BIGINT")),),
+        _cast_each("bucket_counts", "STRING"),
     ),
     _PointField(
         "explicitBounds", T.ArrayType(_DBL),
-        (("explicit_bounds", T.ArrayType(_DBL), lambda p: p["explicitBounds"]),),
-        lambda: F.col("explicit_bounds"),
+        (("explicit_bounds", T.ArrayType(_DBL), "p.explicitBounds"),),
+        "explicit_bounds",
     ),
-    _PointField(
-        "scale", _INT,
-        (("scale", _INT, lambda p: p["scale"]),),
-        lambda: F.col("scale"),
-    ),
+    _PointField("scale", _INT, (("scale", _INT, "p.scale"),), "scale"),
     _PointField(
         "zeroCount", _STR,
-        (("zero_count", _LONG, lambda p: p["zeroCount"].cast("long")),),
-        lambda: F.col("zero_count").cast("string"),
+        (("zero_count", _LONG, "CAST(p.zeroCount AS BIGINT)"),),
+        "CAST(zero_count AS STRING)",
     ),
     _PointField(
         "positive", _struct(offset=_INT, bucketCounts=T.ArrayType(_STR)),
         (
-            ("pos_offset", _INT, lambda p: p["positive"]["offset"]),
+            ("pos_offset", _INT, "p.positive.`offset`"),
             ("pos_bucket_counts", T.ArrayType(_LONG),
-             lambda p: F.transform(p["positive"]["bucketCounts"], _as_long)),
+             _cast_each("p.positive.bucketCounts", "BIGINT")),
         ),
-        lambda: F.struct(
-            F.col("pos_offset").alias("offset"),
-            F.transform(F.col("pos_bucket_counts"), _as_string).alias("bucketCounts"),
+        _named_struct(
+            ("offset", "pos_offset"),
+            ("bucketCounts", _cast_each("pos_bucket_counts", "STRING")),
         ),
     ),
     _PointField(
         "quantileValues", _QUANTILES,
-        (("quantiles", _QUANTILES, lambda p: p["quantileValues"]),),
-        lambda: F.col("quantiles"),
+        (("quantiles", _QUANTILES, "p.quantileValues"),),
+        "quantiles",
     ),
 )
 
@@ -573,81 +598,95 @@ OTLP_EXPORT_METRICS_SCHEMA = _metrics_schema(METRIC_BRANCHES)
 # --- decode (receiver side) -------------------------------------------------------
 
 
-def _attr(entries, key: str):
-    """First value for ``key`` in a KeyValue list — string branch first,
-    int branch as fallback (the corpus never uses both on one key).
-    ``F.get`` (not ``[0]``) so an absent key or empty attribute list is
-    NULL instead of an ANSI INVALID_ARRAY_INDEX error."""
-    hit = F.get(F.filter(entries, lambda a: a["key"] == F.lit(key)), 0)["value"]
-    return F.coalesce(hit["stringValue"], hit["intValue"])
+def _decode(df: DataFrame, layers: tuple[tuple[str, ...], ...]) -> DataFrame:
+    """``df`` through each layer's SQL projection in turn."""
+    for exprs in layers:
+        df = df.selectExpr(*exprs)
+    return df
 
 
-def _resource(signal: str) -> list[Column]:
-    """The flat resource-attribute columns of an ``_unnest``ed frame."""
-    return [
-        _attr(F.col("_res_attrs"), key).alias(col)
-        for key, col in _RESOURCE_ATTRS[signal]
-    ]
+def _head(signal: str) -> tuple[str, ...]:
+    """The leading columns of every decoded row: the flat resource
+    attributes, then the scope."""
+    return (*[c for _, c in _RESOURCE_ATTRS[signal]], "scope_name", "scope_version")
 
 
-def _unnest(df: DataFrame, schema: T.StructType, signal: str) -> DataFrame:
-    """``from_json`` + explode resources, scopes, items: one row per item
-    with ``_res_attrs``, ``scope_name``, ``scope_version`` and ``_item``.
-    The explode fan-out is bounded by the request batch size, never the
-    corpus, and nothing here shuffles."""
+def _unnest(schema: T.StructType, signal: str) -> tuple[tuple[str, ...], ...]:
+    """The layers of ``from_json`` + explode resources, scopes, items: one
+    row per item with the ``_head`` columns and ``_item``. The resource
+    attributes are resolved in the scope layer, below the items explode,
+    so once per scope rather than once per item. The explode fan-out is
+    bounded by the request batch size, never the corpus, and nothing here
+    shuffles."""
     res_key, scope_key, items_key = _ENVELOPE[signal]
-    req = F.from_json(F.col(PAYLOAD_COL), schema)
-    res = df.withColumn("_res", F.explode(req[res_key]))
-    scopes = res.select(
-        F.col("_res")["resource"]["attributes"].alias("_res_attrs"),
-        F.explode(F.col("_res")[scope_key]).alias("_scope"),
+    resource = _RESOURCE_ATTRS[signal]
+    request = f"from_json({_q(PAYLOAD_COL)}, {_lit(schema.simpleString())})"
+    return (
+        (f"explode({request}.{_q(res_key)}) AS _res",),
+        (
+            *[f"{_attr('_res.resource.attributes', k)} AS {c}" for k, c in resource],
+            f"explode(_res.{_q(scope_key)}) AS _scope",
+        ),
+        (
+            *[c for _, c in resource],
+            "_scope.scope.name AS scope_name",
+            "_scope.scope.version AS scope_version",
+            f"explode(_scope.{_q(items_key)}) AS _item",
+        ),
     )
-    return scopes.select(
-        "_res_attrs",
-        F.col("_scope")["scope"]["name"].alias("scope_name"),
-        F.col("_scope")["scope"]["version"].alias("scope_version"),
-        F.explode(F.col("_scope")[items_key]).alias("_item"),
-    )
+
+
+_LOGS_DECODE = (
+    *_unnest(OTLP_EXPORT_LOGS_SCHEMA, "logs"),
+    (
+        *_head("logs"),
+        "CAST(_item.timeUnixNano AS BIGINT) AS time_unix_nano",
+        "_item.severityNumber AS severity_number",
+        "_item.severityText AS severity_text",
+        "_item.body.stringValue AS body",
+        "_item.traceId AS trace_id",
+        "_item.spanId AS span_id",
+        "coalesce(_item.droppedAttributesCount, 0) AS dropped_attributes_count",
+        f"CAST({_attr('_item.attributes', 'event.index')} AS BIGINT) AS event_index",
+        "map_from_entries(transform(_item.attributes, a -> "
+        f"{_named_struct(('key', 'a.key'), ('value', _ANY))})) AS attributes",
+    ),
+)
 
 
 def parse_otlp_json(df: DataFrame) -> DataFrame:
     """Decode a ``payload`` column of OTLP/JSON ExportLogsServiceRequest
     payloads into one flat row per LogRecord.
 
-    Plan shape: `from_json` → 3 nested `explode`s (Generate nodes) → one
-    projection; everything stays in whole-stage codegen. At 100 TB this
+    Plan shape: `from_json` → 3 nested `explode`s (Generate nodes), the
+    resource attributes resolved between the scope and item explodes →
+    one projection; no Python, no shuffle. At 100 TB this
     is a scan-side decode with no shuffle at all — the exact role of the
     reference's OTLP receiver (views/otlp/proto/logs.rs).
     """
-    r = F.col("_item")
-    return _unnest(df, OTLP_EXPORT_LOGS_SCHEMA, "logs").select(
-        *_resource("logs"),
-        "scope_name",
-        "scope_version",
-        r["timeUnixNano"].cast("long").alias("time_unix_nano"),
-        r["severityNumber"].alias("severity_number"),
-        r["severityText"].alias("severity_text"),
-        r["body"]["stringValue"].alias("body"),
-        r["traceId"].alias("trace_id"),
-        r["spanId"].alias("span_id"),
-        F.coalesce(r["droppedAttributesCount"], F.lit(0)).alias(
-            "dropped_attributes_count"
-        ),
-        _attr(r["attributes"], "event.index").cast("long").alias(
-            "event_index"
-        ),
-        F.map_from_entries(
-            F.transform(
-                r["attributes"],
-                lambda a: F.struct(
-                    a["key"].alias("key"),
-                    F.coalesce(
-                        a["value"]["stringValue"], a["value"]["intValue"]
-                    ).alias("value"),
-                ),
-            )
-        ).alias("attributes"),
-    )
+    return _decode(df, _LOGS_DECODE)
+
+
+_START = "CAST(_item.startTimeUnixNano AS BIGINT)"
+_END = "CAST(_item.endTimeUnixNano AS BIGINT)"
+_TRACES_DECODE = (
+    *_unnest(OTLP_EXPORT_TRACES_SCHEMA, "traces"),
+    (
+        *_head("traces"),
+        "_item.traceId AS trace_id",
+        "_item.spanId AS span_id",
+        "_item.parentSpanId AS parent_span_id",
+        "_item.name AS name",
+        "_item.kind AS kind",
+        f"{_START} AS start_unix_nano",
+        f"{_END} AS end_unix_nano",
+        f"{_END} - {_START} AS duration_ns",
+        "coalesce(_item.status.code, 0) AS status_code",
+        "_item.status.message AS status_message",
+        f"{_attr('_item.attributes', 'peer.service')} AS peer_service",
+        f"CAST({_attr('_item.attributes', 'span.seq')} AS BIGINT) AS span_seq",
+    ),
+)
 
 
 def parse_otlp_traces_json(df: DataFrame) -> DataFrame:
@@ -656,48 +695,82 @@ def parse_otlp_traces_json(df: DataFrame) -> DataFrame:
     zero-Python zero-shuffle scan-side plan. ``status.code`` defaults to
     0 (UNSET) when omitted, per the proto3 default; a missing
     ``parentSpanId`` stays NULL (root span)."""
-    s = F.col("_item")
-    start = s["startTimeUnixNano"].cast("long")
-    end = s["endTimeUnixNano"].cast("long")
-    return _unnest(df, OTLP_EXPORT_TRACES_SCHEMA, "traces").select(
-        *_resource("traces"),
-        "scope_name",
-        "scope_version",
-        s["traceId"].alias("trace_id"),
-        s["spanId"].alias("span_id"),
-        s["parentSpanId"].alias("parent_span_id"),
-        s["name"].alias("name"),
-        s["kind"].alias("kind"),
-        start.alias("start_unix_nano"),
-        end.alias("end_unix_nano"),
-        (end - start).alias("duration_ns"),
-        F.coalesce(s["status"]["code"], F.lit(0)).alias("status_code"),
-        s["status"]["message"].alias("status_message"),
-        _attr(s["attributes"], "peer.service").alias("peer_service"),
-        _attr(s["attributes"], "span.seq").cast("long").alias("span_seq"),
+    return _decode(df, _TRACES_DECODE)
+
+
+def _point(branch: _Branch) -> str:
+    """``branch``'s wire data point ``p`` → the common point struct;
+    fields the branch lacks are typed NULLs."""
+    decoded = {
+        name: sql
+        for f in _POINT_FIELDS if f.key in branch.points
+        for name, _, sql in f.decode
+    }
+    return _named_struct(
+        ("t", "p.timeUnixNano"),
+        *[
+            (f.name, decoded.get(f.name, f"CAST(NULL AS {f.dataType.simpleString()})"))
+            for f in _POINT.fields[1:-1]
+        ],
+        ("attrs", "p.attributes"),
     )
 
 
-def _point(branch: _Branch) -> Callable[[Column], Column]:
-    """``branch``'s wire data point → the common point struct; fields the
-    branch lacks are typed NULLs."""
+def _coalesce(exprs: list[str], null_type: str) -> str:
+    return f"coalesce({', '.join(exprs)})" if exprs else f"CAST(NULL AS {null_type})"
 
-    def point(p: Column) -> Column:
-        decoded = {
-            name: fn(p)
-            for f in _POINT_FIELDS if f.key in branch.points
-            for name, _, fn in f.decode
-        }
-        return F.struct(
-            p["timeUnixNano"].alias("t"),
+
+@functools.cache
+def _metrics_sql(branches: tuple[str, ...]) -> tuple[tuple[str, ...], ...]:
+    """The decode layers of :func:`parse_otlp_metrics_json` for the Metric
+    oneof ``branches``: plain strings, so nothing cached here outlives a
+    session."""
+    decoded = [b for b in _BRANCHES if b.name in branches]
+    # expressions over the DECODED branches only (they must not name
+    # absent fields); the when-chain order (gauge, sum, exp_histogram,
+    # summary, ELSE histogram) matches the all-branch form exactly when
+    # every branch is requested
+    metric_type = "CASE WHEN false THEN CAST(NULL AS STRING)"
+    for b in decoded:
+        if b.name != _OTHERWISE:
+            metric_type += f" WHEN _item.{_q(b.field)} IS NOT NULL THEN {_lit(b.name)}"
+    if _OTHERWISE in branches:
+        metric_type += f" ELSE {_lit(_OTHERWISE)}"
+    metric_type += " END"
+    temporality = [f"_item.{_q(b.field)}.{_TEMPORALITY}" for b in decoded if b.temporality]
+    monotonic = [f"_item.{_q(b.field)}.{_MONOTONIC}" for b in decoded if b.monotonic]
+    empty = f"CAST(array() AS array<{_POINT.simpleString()}>)"
+    points = ", ".join(
+        f"coalesce(transform(_item.{_q(b.field)}.{_DATA_POINTS}, p -> {_point(b)}), {empty})"
+        for b in decoded
+    )
+    return (
+        *_unnest(_metrics_schema(branches), "metrics"),
+        (
+            *_head("metrics"),
+            "_item.name AS metric_name",
+            "_item.unit AS metric_unit",
+            f"{metric_type} AS metric_type",
+            f"{_coalesce(temporality, 'INT')} AS temporality",
+            f"{_coalesce(monotonic, 'BOOLEAN')} AS is_monotonic",
+            f"explode({points if len(decoded) == 1 else f'concat({points})'}) AS _p",
+        ),
+        (
+            *_head("metrics"),
+            "metric_name",
+            "metric_unit",
+            "metric_type",
+            "temporality",
+            "is_monotonic",
+            "CAST(_p.t AS BIGINT) AS time_unix_nano",
             *[
-                decoded.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+                f"_p.{_q(f.name)} AS {'sum_value' if f.name == 'sum' else _q(f.name)}"
                 for f in _POINT.fields[1:-1]
             ],
-            p["attributes"].alias("attrs"),
-        )
-
-    return point
+            f"{_attr('_p.attrs', 'host.name')} AS host_name",
+            f"CAST({_attr('_p.attrs', 'point.seq')} AS BIGINT) AS point_seq",
+        ),
+    )
 
 
 def parse_otlp_metrics_json(
@@ -731,125 +804,99 @@ def parse_otlp_metrics_json(
         raise ValueError(f"unknown metric branches: {sorted(unknown)}")
     if not branches:
         raise ValueError("at least one metric branch is required")
-    decoded = [b for b in _BRANCHES if b.name in branches]
-    mc = F.col("_item")
-    # expressions over the DECODED branches only (they must not name
-    # absent fields); the when-chain order (gauge, sum, exp_histogram,
-    # summary, `otherwise` histogram) matches the all-branch form exactly
-    # when every branch is requested
-    metric_type = F.when(F.lit(False), F.lit(None).cast("string"))
-    for b in decoded:
-        if b.name != _OTHERWISE:
-            metric_type = metric_type.when(mc[b.field].isNotNull(), F.lit(b.name))
-    if _OTHERWISE in branches:
-        metric_type = metric_type.otherwise(F.lit(_OTHERWISE))
-    temporality = [mc[b.field][_TEMPORALITY] for b in decoded if b.temporality]
-    monotonic = [mc[b.field][_MONOTONIC] for b in decoded if b.monotonic]
-    empty = F.array().cast(T.ArrayType(_POINT))
-    point_arrays = [
-        F.coalesce(F.transform(mc[b.field][_DATA_POINTS], _point(b)), empty)
-        for b in decoded
-    ]
-    pts = _unnest(df, _metrics_schema(branches), "metrics").select(
-        "_res_attrs",
-        "scope_name",
-        "scope_version",
-        mc["name"].alias("metric_name"),
-        mc["unit"].alias("metric_unit"),
-        metric_type.alias("metric_type"),
-        (
-            F.coalesce(*temporality) if temporality else F.lit(None).cast("int")
-        ).alias("temporality"),
-        (
-            F.coalesce(*monotonic) if monotonic else F.lit(None).cast("boolean")
-        ).alias("is_monotonic"),
-        F.explode(
-            F.concat(*point_arrays) if len(point_arrays) > 1 else point_arrays[0]
-        ).alias("_p"),
-    )
-    p = F.col("_p")
-    return pts.select(
-        *_resource("metrics"),
-        "scope_name",
-        "scope_version",
-        "metric_name",
-        "metric_unit",
-        "metric_type",
-        "temporality",
-        "is_monotonic",
-        p["t"].cast("long").alias("time_unix_nano"),
-        *[
-            p[f.name].alias("sum_value" if f.name == "sum" else f.name)
-            for f in _POINT.fields[1:-1]
-        ],
-        _attr(p["attrs"], "host.name").alias("host_name"),
-        _attr(p["attrs"], "point.seq").cast("long").alias("point_seq"),
-    )
+    return _decode(df, _metrics_sql(tuple(branches)))
 
 
 # --- encode (exporter side) ---------------------------------------------------
 
 
-def _kv(key, string: Column | None = None, int: Column | None = None) -> Column:
-    """A KeyValue struct; the AnyValue branch left None is NULL, which
-    ``to_json`` omits from the wire."""
-    null = F.lit(None).cast("string")
-    return F.struct(
-        (F.lit(key) if isinstance(key, str) else key).alias("key"),
-        F.struct(
-            (null if string is None else string).alias("stringValue"),
-            (null if int is None else int).alias("intValue"),
-        ).alias("value"),
+_NULL = "CAST(NULL AS STRING)"
+
+
+def _kv(key: str, string: str = _NULL, int: str = _NULL) -> str:
+    """A KeyValue struct from SQL expressions; the AnyValue branch left
+    NULL is omitted from the wire by ``to_json``."""
+    return _named_struct(
+        ("key", key),
+        ("value", _named_struct(("stringValue", string), ("intValue", int))),
     )
 
 
-def _encode(
-    df: DataFrame,
+class _Encoder(NamedTuple):
+    """One signal's encode as SQL text: the request keys (bucket aside),
+    the per-row projection (keys, ``_item``, ``_bucket``) and the
+    ``to_json`` of the nested request."""
+
+    keys: tuple[str, ...]
+    rows: tuple[str, ...]
+    request: str
+
+
+def _encoder(
     signal: str,
-    item: Column,
+    item: str,
     bucket_of: str,
     group: tuple[str, ...] = (),
-    items=lambda collected: collected,
-) -> DataFrame:
+    items: str = "_items",
+) -> _Encoder:
     """Flat rows → one ``payload`` per (resource, scope, ``group``,
-    bucket): ``item`` is built per row, ``collect_list``ed per request,
-    mapped by ``items`` and nested under the scope and the resource by
-    ``to_json``. The bucket — a stable hash of ``bucket_of`` —
-    bounds request size; the groupBy is the exporter's batching shuffle,
-    the ONE shuffle an encode needs at any scale."""
+    bucket): ``item`` is built per row, ``collect_list``ed per request
+    into ``_items``, mapped by ``items`` and nested under the scope and
+    the resource by ``to_json``. The bucket — a stable hash of
+    ``bucket_of`` — bounds request size; the groupBy is the exporter's
+    batching shuffle, the ONE shuffle an encode needs at any scale."""
     res_key, scope_key, items_key = _ENVELOPE[signal]
     resource = _RESOURCE_ATTRS[signal]
-    grouped = (
-        df.withColumn("_item", item)
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64(bucket_of), F.lit(ENCODE_BUCKETS))
-        )
-        .groupBy(
-            *[c for _, c in resource], "scope_name", "scope_version", *group,
-            "_bucket",
-        )
+    keys = (*_head(signal), *group)
+    scope = _named_struct(
+        ("scope", _named_struct(("name", "scope_name"), ("version", "scope_version"))),
+        (items_key, items),
+    )
+    attributes = ", ".join(_kv(_lit(k), string=c) for k, c in resource)
+    request = _named_struct((res_key, "array(" + _named_struct(
+        ("resource", _named_struct(("attributes", f"array({attributes})"))),
+        (scope_key, f"array({scope})"),
+    ) + ")"))
+    return _Encoder(
+        keys,
+        (
+            *keys,
+            f"{item} AS _item",
+            f"pmod(xxhash64({bucket_of}), {ENCODE_BUCKETS}) AS _bucket",
+        ),
+        f"to_json({request}) AS {_q(PAYLOAD_COL)}",
+    )
+
+
+def _encode(df: DataFrame, enc: _Encoder) -> DataFrame:
+    return (
+        df.selectExpr(*enc.rows)
+        .groupBy(*enc.keys, "_bucket")
         .agg(F.collect_list("_item").alias("_items"))
+        .selectExpr(enc.request)
     )
-    scope = F.struct(
-        F.struct(
-            F.col("scope_name").alias("name"),
-            F.col("scope_version").alias("version"),
-        ).alias("scope"),
-        items(F.col("_items")).alias(items_key),
-    )
-    request = F.struct(
-        F.array(
-            F.struct(
-                F.struct(
-                    F.array(*[_kv(k, string=F.col(c)) for k, c in resource]).alias(
-                        "attributes"
-                    )
-                ).alias("resource"),
-                F.array(scope).alias(scope_key),
-            )
-        ).alias(res_key)
-    )
-    return grouped.select(F.to_json(request).alias(PAYLOAD_COL))
+
+
+_LOG_INT_KEY = f"e.key IN ({', '.join(map(_lit, LOG_INT_ATTR_KEYS))})"
+_LOGS_ENCODE = _encoder(
+    "logs",
+    _named_struct(
+        ("timeUnixNano", "CAST(time_unix_nano AS STRING)"),
+        ("severityNumber", "severity_number"),
+        ("severityText", "severity_text"),
+        ("body", _named_struct(("stringValue", "body"))),
+        ("attributes", "transform(map_entries(attributes), e -> " + _kv(
+            "e.key",
+            string=f"CASE WHEN NOT ({_LOG_INT_KEY}) THEN e.value END",
+            int=f"CASE WHEN {_LOG_INT_KEY} THEN e.value END",
+        ) + ")"),
+        ("traceId", "trace_id"),
+        ("spanId", "span_id"),
+        ("droppedAttributesCount",
+         "CASE WHEN dropped_attributes_count > 0 THEN dropped_attributes_count END"),
+    ),
+    "time_unix_nano",
+)
 
 
 def encode_otlp_json(df: DataFrame) -> DataFrame:
@@ -872,29 +919,30 @@ def encode_otlp_json(df: DataFrame) -> DataFrame:
 
     Returns a DataFrame with a single ``payload`` string column.
     """
+    return _encode(df, _LOGS_ENCODE)
 
-    def attr(e):
-        is_int = e["key"].isin(*LOG_INT_ATTR_KEYS)
-        return _kv(
-            e["key"],
-            string=F.when(~is_int, e["value"]),
-            int=F.when(is_int, e["value"]),
-        )
 
-    record = F.struct(
-        F.col("time_unix_nano").cast("string").alias("timeUnixNano"),
-        F.col("severity_number").alias("severityNumber"),
-        F.col("severity_text").alias("severityText"),
-        F.struct(F.col("body").alias("stringValue")).alias("body"),
-        F.transform(F.map_entries(F.col("attributes")), attr).alias("attributes"),
-        F.col("trace_id").alias("traceId"),
-        F.col("span_id").alias("spanId"),
-        F.when(
-            F.col("dropped_attributes_count") > 0,
-            F.col("dropped_attributes_count"),
-        ).alias("droppedAttributesCount"),
-    )
-    return _encode(df, "logs", record, "time_unix_nano")
+_TRACES_ENCODE = _encoder(
+    "traces",
+    _named_struct(
+        ("traceId", "trace_id"),
+        ("spanId", "span_id"),
+        ("parentSpanId", "parent_span_id"),
+        ("name", "name"),
+        ("kind", "kind"),
+        ("startTimeUnixNano", "CAST(start_unix_nano AS STRING)"),
+        ("endTimeUnixNano", "CAST(end_unix_nano AS STRING)"),
+        ("attributes", "array(" + ", ".join([
+            _kv(_lit("peer.service"), string="peer_service"),
+            _kv(_lit("span.seq"), int="CAST(span_seq AS STRING)"),
+        ]) + ")"),
+        ("status", _named_struct(
+            ("code", "CASE WHEN status_code != 0 THEN status_code END"),
+            ("message", "status_message"),
+        )),
+    ),
+    "trace_id",
+)
 
 
 def encode_otlp_traces_json(df: DataFrame) -> DataFrame:
@@ -913,26 +961,44 @@ def encode_otlp_traces_json(df: DataFrame) -> DataFrame:
     written as ``""``. The span attributes are rebuilt from the typed
     flat columns.
     """
-    record = F.struct(
-        F.col("trace_id").alias("traceId"),
-        F.col("span_id").alias("spanId"),
-        F.col("parent_span_id").alias("parentSpanId"),
-        F.col("name").alias("name"),
-        F.col("kind").alias("kind"),
-        F.col("start_unix_nano").cast("string").alias("startTimeUnixNano"),
-        F.col("end_unix_nano").cast("string").alias("endTimeUnixNano"),
-        F.array(
-            _kv("peer.service", string=F.col("peer_service")),
-            _kv("span.seq", int=F.col("span_seq").cast("string")),
-        ).alias("attributes"),
-        F.struct(
-            F.when(F.col("status_code") != 0, F.col("status_code")).alias(
-                "code"
-            ),
-            F.col("status_message").alias("message"),
-        ).alias("status"),
-    )
-    return _encode(df, "traces", record, "trace_id")
+    return _encode(df, _TRACES_ENCODE)
+
+
+def _metric_data(b: _Branch) -> tuple[str, str]:
+    """``b``'s oneof field of a re-nested Metric: its data struct on rows
+    of that ``metric_type``, NULL (omitted) on the others."""
+    data = [(_DATA_POINTS, "_items")]
+    if b.temporality:
+        data.append((_TEMPORALITY, "temporality"))
+    if b.monotonic:
+        data.append((_MONOTONIC, "is_monotonic"))
+    return b.field, f"CASE WHEN metric_type = {_lit(b.name)} THEN {_named_struct(*data)} END"
+
+
+_METRICS_ENCODE = _encoder(
+    "metrics",
+    _named_struct(
+        ("timeUnixNano", "CAST(time_unix_nano AS STRING)"),
+        *[
+            (f.key, "CASE WHEN metric_type IN ("
+             + ", ".join(_lit(b.name) for b in _BRANCHES if f.key in b.points)
+             + f") THEN {f.encode} END")
+            for f in _POINT_FIELDS
+            if f.encode is not None
+        ],
+        ("attributes", "array(" + ", ".join([
+            _kv(_lit("host.name"), string="host_name"),
+            _kv(_lit("point.seq"), int="CAST(point_seq AS STRING)"),
+        ]) + ")"),
+    ),
+    "time_unix_nano",
+    group=("metric_name", "metric_unit", "metric_type", "temporality", "is_monotonic"),
+    items="array(" + _named_struct(
+        ("name", "metric_name"),
+        ("unit", "metric_unit"),
+        *[_metric_data(b) for b in _BRANCHES],
+    ) + ")",
+)
 
 
 def encode_otlp_metrics_json(df: DataFrame) -> DataFrame:
@@ -950,43 +1016,4 @@ def encode_otlp_metrics_json(df: DataFrame) -> DataFrame:
     FLAT rows round-trip exactly (doubles are lossless for |v| < 2^53,
     and OTLP consumers treat the two branches as the same number).
     """
-    t = F.col("metric_type")
-    point = F.struct(
-        F.col("time_unix_nano").cast("string").alias("timeUnixNano"),
-        *[
-            F.when(
-                t.isin(*[b.name for b in _BRANCHES if f.key in b.points]),
-                f.encode(),
-            ).alias(f.key)
-            for f in _POINT_FIELDS
-            if f.encode is not None
-        ],
-        F.array(
-            _kv("host.name", string=F.col("host_name")),
-            _kv("point.seq", int=F.col("point_seq").cast("string")),
-        ).alias("attributes"),
-    )
-
-    def metric(pts: Column) -> Column:
-        def branch(b: _Branch) -> Column:
-            data = [pts.alias(_DATA_POINTS)]
-            if b.temporality:
-                data.append(F.col("temporality").alias(_TEMPORALITY))
-            if b.monotonic:
-                data.append(F.col("is_monotonic").alias(_MONOTONIC))
-            return F.when(t == b.name, F.struct(*data)).alias(b.field)
-
-        return F.array(
-            F.struct(
-                F.col("metric_name").alias("name"),
-                F.col("metric_unit").alias("unit"),
-                *[branch(b) for b in _BRANCHES],
-            )
-        )
-
-    return _encode(
-        df, "metrics", point, "time_unix_nano",
-        group=("metric_name", "metric_unit", "metric_type", "temporality",
-               "is_monotonic"),
-        items=metric,
-    )
+    return _encode(df, _METRICS_ENCODE)

@@ -276,17 +276,13 @@ def minhash_near_dup_pairs(
         ).alias("_sig"),
     )
 
-    # band keys as one nested expression (posexplode keeps the band index)
+    # band keys as one nested expression (posexplode keeps the band index).
+    # Not persisted: the pairs are returned lazily, so no action in here
+    # could release a cache. Once the self-join shuffles both sides, they
+    # are one reused exchange and the signature UDF runs once; below the
+    # broadcast threshold it runs once per side over a small table.
     band_arr = _band_keys(F.col("_sig"), bands, rows_per_band)
-    # persist the ids-only banded projection (3 longs × bands per doc —
-    # the one thing worth caching in an LSH pipeline) so the signature UDF
-    # runs ONCE instead of once per self-join side; MEMORY_AND_DISK spills
-    # rather than recomputing at scale
-    from pyspark import StorageLevel
-
-    banded = sig.select(id_col, F.posexplode(band_arr).alias("band", "bhash")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    banded = sig.select(id_col, F.posexplode(band_arr).alias("band", "bhash"))
 
     left = banded.select(F.col(id_col).alias("id_a"), "band", "bhash")
     right = banded.select(F.col(id_col).alias("id_b"), "band", "bhash")
@@ -384,15 +380,14 @@ def near_dups_against_index(
             ).alias("band", "bhash"),
         )
 
-    from pyspark import StorageLevel
-
     # the batch side IS a (transient) index — one construction path, so
-    # probe and build banding can never drift; persisted so the
-    # signature UDF runs once, not once per consumer (banding +
-    # verification); MEMORY_AND_DISK spills rather than recomputes
+    # probe and build banding can never drift. Not persisted, as in
+    # minhash_near_dup_pairs: exact verification reads only the shingle
+    # hashes, so the signature UDF is pruned from that branch and runs
+    # once, in the banding; signature-only verification runs it twice.
     new_sig = minhash_index(
         ensure_parallelism(batch), text_col, id_col, n_hashes, shingle_k
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     cands = (
         banded(new_sig, "id_new")
         .join(banded(index, "id_hist"), on=["band", "bhash"])

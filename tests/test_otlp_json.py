@@ -1,11 +1,16 @@
 """Wire pins of the OTLP/JSON codec (sources/otlp_json.py): the read
-schemas, exact encoder payloads and generator digests, so any field
-reorder or rename fails here. The decode, encode and round-trip tests of
-the three signals are in tests/test_logpatterns.py (TestOtlp*)."""
+schemas, exact encoder payloads, generator digests, and the decoders'
+output schemas and row digests, so any field reorder or rename fails
+here; plus the py4j budget of building a round trip. The decode, encode
+and round-trip tests of the three signals are in tests/test_logpatterns.py
+(TestOtlp*)."""
 
 import hashlib
+import json
+import threading
 
 import pytest
+from pyspark.sql import types as T
 
 from otel_arrow_spark.sources import otlp_json
 
@@ -290,3 +295,145 @@ class TestWirePins:
         """The cached oracle corpora are these bytes."""
         digest = hashlib.sha256("\n".join(generate(500)).encode()).hexdigest()
         assert digest == _GENERATOR_SHA256[signal]
+
+
+def _shape(dt) -> str:
+    """``dt`` as a type string that also marks non-nullable fields,
+    elements and map values with ``!``."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{f.name}:{_shape(f.dataType)}{'' if f.nullable else '!'}"
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_shape(dt.elementType)}{'' if dt.containsNull else '!'}>"
+    if isinstance(dt, T.MapType):
+        return (
+            f"map<{_shape(dt.keyType)},"
+            f"{_shape(dt.valueType)}{'' if dt.valueContainsNull else '!'}>"
+        )
+    return dt.simpleString()
+
+
+def _histogram_only(df):
+    return otlp_json.parse_otlp_metrics_json(df, ("histogram",))
+
+
+_DECODERS = {
+    "logs": (otlp_json.generate_otlp_json_requests, otlp_json.parse_otlp_json),
+    "traces": (
+        otlp_json.generate_otlp_json_trace_requests,
+        otlp_json.parse_otlp_traces_json,
+    ),
+    "metrics": (
+        otlp_json.generate_otlp_json_metric_requests,
+        otlp_json.parse_otlp_metrics_json,
+    ),
+    "histogram": (otlp_json.generate_otlp_json_metric_requests, _histogram_only),
+}
+_ENCODERS = {
+    "logs": otlp_json.encode_otlp_json,
+    "traces": otlp_json.encode_otlp_traces_json,
+    "metrics": otlp_json.encode_otlp_metrics_json,
+    "histogram": otlp_json.encode_otlp_metrics_json,
+}
+_METRIC_SHAPE = (
+    "struct<service_name:string,scope_name:string,scope_version:string,"
+    "metric_name:string,metric_unit:string,metric_type:string,"
+    "temporality:int,is_monotonic:boolean,time_unix_nano:bigint,"
+    "value:double,count:bigint,sum_value:double,bucket_counts:array<bigint>,"
+    "explicit_bounds:array<double>,scale:int,zero_count:bigint,"
+    "pos_offset:int,pos_bucket_counts:array<bigint>,"
+    "quantiles:array<struct<quantile:double,value:double>>,"
+    "host_name:string,point_seq:bigint>"
+)
+_DECODED_SHAPES = {
+    "logs": (
+        "struct<service_name:string,environment:string,scope_name:string,"
+        "scope_version:string,time_unix_nano:bigint,severity_number:int,"
+        "severity_text:string,body:string,trace_id:string,span_id:string,"
+        "dropped_attributes_count:int!,event_index:bigint,"
+        "attributes:map<string,string>>"
+    ),
+    "traces": (
+        "struct<service_name:string,scope_name:string,scope_version:string,"
+        "trace_id:string,span_id:string,parent_span_id:string,name:string,"
+        "kind:int,start_unix_nano:bigint,end_unix_nano:bigint,"
+        "duration_ns:bigint,status_code:int!,status_message:string,"
+        "peer_service:string,span_seq:bigint>"
+    ),
+    "metrics": _METRIC_SHAPE,
+    "histogram": _METRIC_SHAPE,
+}
+# (rows, sha256 of the rows as sorted key-sorted JSON lines) at n=500
+_DECODED_ROWS = {
+    "logs": (500, "9d6f135fa6d080a67fd0f06aeea9ab439dc29980fcd1abd38a9911b64c5f3ac8"),
+    "traces": (500, "a71b95a78e738dfdfdc989981dd893e273384e67904413760fb2c3018e2f21b5"),
+    "metrics": (500, "f29a57a878d6da8e673626c6c0f3623a155c0225d69379517aec531cba6e87b1"),
+    "histogram": (137, "5240234615b4301af2dcf280b35c9b2dc7a44f4c06fca22bab0e816864ba618b"),
+}
+
+
+def _payloads(spark, signal, n=500):
+    reqs = _DECODERS[signal][0](n)
+    return spark.createDataFrame([(p,) for p in reqs], "payload string")
+
+
+class TestDecodedPins:
+    @pytest.mark.parametrize("signal", list(_DECODERS))
+    def test_output_schema(self, spark, signal):
+        """Names, order, types and nullability of each decoder's rows."""
+        decode = _DECODERS[signal][1]
+        assert _shape(decode(_payloads(spark, signal, 0)).schema) == (
+            _DECODED_SHAPES[signal]
+        )
+
+    @pytest.mark.parametrize("signal", list(_DECODERS))
+    def test_rows_digest(self, spark, signal):
+        decode = _DECODERS[signal][1]
+        rows = sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True)
+            for r in decode(_payloads(spark, signal)).collect()
+        )
+        digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+        assert (len(rows), digest) == _DECODED_ROWS[signal]
+
+
+class TestPlanBudget:
+    @pytest.mark.parametrize("signal", list(_DECODERS))
+    def test_round_trip_builds_in_few_jvm_calls(self, spark, signal):
+        """Building decode → encode → decode (no job runs) crosses into
+        the JVM a bounded number of times, whatever the expression size:
+        each codec layer is one SQL-text projection or aggregate, not a
+        py4j call per expression node."""
+        from py4j.clientserver import JavaClient
+
+        decode, encode = _DECODERS[signal][1], _ENCODERS[signal]
+        df = _payloads(spark, signal, 0)
+        calls = 0
+        send = JavaClient.send_command
+        builder = threading.get_ident()
+
+        def counting(self, *args, **kwargs):
+            # py4j's finalizer thread also sends here, to release the JVM
+            # objects that earlier tests dropped: not this build's calls
+            nonlocal calls
+            calls += threading.get_ident() == builder
+            return send(self, *args, **kwargs)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(JavaClient, "send_command", counting)
+            decode(encode(decode(df)))
+        assert calls <= 300, f"{calls} py4j calls to build one round trip"
+
+
+class TestDecodePlan:
+    @pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
+    def test_attribute_lookups(self, spark, signal):
+        """Each of the three attribute lookups runs one filter per row,
+        and the resource attributes are resolved below the items
+        explode, not once per item."""
+        decoded = _DECODERS[signal][1](_payloads(spark, signal, 0))
+        plan = decoded._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("filter(") == 3
+        assert plan.index(" AS service_name") > plan.index("Generate explode(_scope")

@@ -793,10 +793,15 @@ class TestPacking:
 
 
 def test_near_dup_calls_leave_nothing_cached(spark, docs, embeddings):
-    """simhash_near_dup_pairs and semantic_dedup return lazy frames:
+    """simhash_near_dup_pairs, minhash_near_dup_pairs,
+    near_dups_against_index and semantic_dedup return lazy frames:
     consuming two calls of each, on different inputs, leaves no more
     persistent RDDs than before."""
-    from otel_arrow_spark.textops.dedup import semantic_dedup
+    from otel_arrow_spark.textops.dedup import (
+        minhash_index,
+        near_dups_against_index,
+        semantic_dedup,
+    )
     from otel_arrow_spark.textops.ivf import deterministic_centroids
 
     jsc = spark.sparkContext._jsc
@@ -804,6 +809,9 @@ def test_near_dup_calls_leave_nothing_cached(spark, docs, embeddings):
     for keep in (0, 1):
         d = docs.where(F.col("doc_id") % 2 >= keep)
         simhash_near_dup_pairs(d, max_hamming=3).collect()
+        minhash_near_dup_pairs(d, jaccard_threshold=0.8).collect()
+        hist = minhash_index(d.where(F.col("doc_id") % 3 == 0))
+        near_dups_against_index(d.where(F.col("doc_id") % 3 != 0), hist).collect()
         e = embeddings.where(F.col("vec_id") % 2 >= keep)
         semantic_dedup(e, deterministic_centroids(e, 4), 0.42).collect()
         assert len(jsc.getPersistentRDDs()) == before
