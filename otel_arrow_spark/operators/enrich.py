@@ -8,7 +8,9 @@ lookup table; the Spark-native realization is a broadcast hash join — the
 dictionary ships to every executor once, the probe stays narrow (no
 shuffle), and the join is whole-stage-codegen'd. The dictionaries are
 built on the driver as ``LocalRelation``s (``session.local_frame``), so
-their broadcast is built from driver-held rows without a Spark job.
+no RDD of parallelized rows is scanned for them. Each broadcast still
+runs one small Spark job per execution: ``BroadcastExchange`` collects
+its child through a job, also over a ``LocalTableScan``.
 
 Unknown keys enrich to NULL via left join; rows are never dropped
 (FIXTURES.md §3).

@@ -121,11 +121,13 @@ def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFr
     """A small driver-built table as a ``LocalRelation``.
 
     ``spark.createDataFrame(list, schema)`` parallelizes the rows into an
-    RDD (``Scan ExistingRDD``), so a broadcast of it runs a Spark job just
-    to collect them back. Built from an Arrow table instead, the same rows
-    plan as ``LocalTableScan`` (up to
-    ``spark.sql.execution.arrow.localRelationThreshold``, also with Arrow
-    conversion off) and their broadcast is built on the driver, no job.
+    RDD (``Scan ExistingRDD``) that every plan reading them scans. Built
+    from an Arrow table instead, the same rows plan as ``LocalTableScan``
+    (up to ``spark.sql.execution.arrow.localRelationThreshold``, also with
+    Arrow conversion off), a leaf that holds them on the driver. A
+    broadcast of either still runs one small Spark job per execution:
+    ``BroadcastExchange`` collects its child through a job, one task per
+    core, also over a ``LocalTableScan``.
 
     ``rows`` are tuples in field order. Not for timestamp columns: Arrow
     reads a naive ``datetime`` as UTC where the RDD path reads it as local

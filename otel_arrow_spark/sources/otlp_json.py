@@ -12,8 +12,12 @@ encoding), in both directions:
 * decode: one `from_json` with a typed schema plus one `explode` per
   nesting level — pure JVM expression work inside whole-stage codegen,
   zero Python, zero shuffle;
-* encode: rows → `collect_list` per (resource, scope, hash bucket) →
-  `to_json`, the exporter's batching shuffle and nothing else.
+* encode: rows → `collect_list` per (resource, scope, bucket) →
+  `to_json`, the exporter's batching shuffle and nothing else. Logs and
+  metrics requests hold at most `ENCODE_BATCH_ITEMS` items, as the
+  reference's batch processor flushes by item count; a traces request
+  holds whole traces. The shuffle has a fixed reducer count, one per core
+  at least, so the reduce stage runs on every core.
 
 Resource and scope are one layer shared by every signal, as in the
 reference: `_ENVELOPE` names each signal's `resourceX → scopeX → items`
@@ -68,7 +72,14 @@ _EPOCH_NANOS = 1_767_225_600_000_000_000
 # The column every decoder reads the request bodies from and every encoder
 # writes them to.
 PAYLOAD_COL = "payload"
-# Hash buckets per (resource, scope) in the encoders: bounds request size.
+# Items per logs or metrics request at most: the OpenTelemetry Collector
+# batch processor's default send size. A power of two no larger than 2^33,
+# so that ``monotonically_increasing_id() DIV ENCODE_BATCH_ITEMS`` (the id
+# is partition index << 33 | row index) never puts two map partitions'
+# rows in one bucket.
+ENCODE_BATCH_ITEMS = 8192
+# Trace-id hash buckets per (resource, scope) in the traces encoder. They
+# keep every trace in one request (coherence); they bound no size.
 ENCODE_BUCKETS = 64
 # Log attribute keys whose AnyValue is the int64 branch (the rest are strings).
 LOG_INT_ATTR_KEYS = ("event.index",)
@@ -614,25 +625,33 @@ def _head(signal: str) -> tuple[str, ...]:
 def _unnest(schema: T.StructType, signal: str) -> tuple[tuple[str, ...], ...]:
     """The layers of ``from_json`` + explode resources, scopes, items: one
     row per item with the ``_head`` columns and ``_item``. The resource
-    attributes are resolved in the scope layer, below the items explode,
-    so once per scope rather than once per item. The explode fan-out is
-    bounded by the request batch size, never the corpus, and nothing here
-    shuffles."""
+    attributes are resolved above the scopes explode, the scope name and
+    version above the items explode, so once per resource and once per
+    scope rather than once per item. Each explode's array is its own
+    column that nothing above it reads, so an exploded row never carries
+    its parent: a row that kept the whole ``_scope`` would copy the
+    request's entire item list once per item, quadratic in the request
+    size (a 2,000-record logs request ran a 2 GB heap out of memory).
+    The explode fan-out is bounded by the request batch size, never the
+    corpus, and nothing here shuffles."""
     res_key, scope_key, items_key = _ENVELOPE[signal]
-    resource = _RESOURCE_ATTRS[signal]
+    attrs = _RESOURCE_ATTRS[signal]
+    resource = tuple(c for _, c in attrs)
     request = f"from_json({_q(PAYLOAD_COL)}, {_lit(schema.simpleString())})"
     return (
         (f"explode({request}.{_q(res_key)}) AS _res",),
         (
-            *[f"{_attr('_res.resource.attributes', k)} AS {c}" for k, c in resource],
-            f"explode(_res.{_q(scope_key)}) AS _scope",
+            *[f"{_attr('_res.resource.attributes', k)} AS {c}" for k, c in attrs],
+            f"_res.{_q(scope_key)} AS _scopes",
         ),
+        (*resource, "explode(_scopes) AS _scope"),
         (
-            *[c for _, c in resource],
+            *resource,
             "_scope.scope.name AS scope_name",
             "_scope.scope.version AS scope_version",
-            f"explode(_scope.{_q(items_key)}) AS _item",
+            f"_scope.{_q(items_key)} AS _scope_items",
         ),
+        (*_head(signal), "explode(_scope_items) AS _item"),
     )
 
 
@@ -823,8 +842,8 @@ def _kv(key: str, string: str = _NULL, int: str = _NULL) -> str:
 
 
 class _Encoder(NamedTuple):
-    """One signal's encode as SQL text: the request keys (bucket aside),
-    the per-row projection (keys, ``_item``, ``_bucket``) and the
+    """One signal's encode as SQL text: the request keys, ``_bucket``
+    included, the per-row projection (keys, ``_item``) and the
     ``to_json`` of the nested request."""
 
     keys: tuple[str, ...]
@@ -832,19 +851,25 @@ class _Encoder(NamedTuple):
     request: str
 
 
+# A logs or metrics request: one group's rows among at most
+# ENCODE_BATCH_ITEMS consecutive rows of one map partition.
+_BATCH_BUCKET = f"monotonically_increasing_id() DIV {ENCODE_BATCH_ITEMS}"
+
+
 def _encoder(
     signal: str,
     item: str,
-    bucket_of: str,
+    bucket: str,
     group: tuple[str, ...] = (),
     items: str = "_items",
 ) -> _Encoder:
     """Flat rows → one ``payload`` per (resource, scope, ``group``,
-    bucket): ``item`` is built per row, ``collect_list``ed per request
-    into ``_items``, mapped by ``items`` and nested under the scope and
-    the resource by ``to_json``. The bucket — a stable hash of
-    ``bucket_of`` — bounds request size; the groupBy is the exporter's
-    batching shuffle, the ONE shuffle an encode needs at any scale."""
+    ``bucket``): ``item`` is built per row, ``collect_list``ed per
+    request into ``_items``, mapped by ``items`` and nested under the
+    scope and the resource by ``to_json``. ``bucket`` is a SQL
+    expression over the row that splits a group into requests; the
+    groupBy is the exporter's batching shuffle, the ONE shuffle an encode
+    needs at any scale."""
     res_key, scope_key, items_key = _ENVELOPE[signal]
     resource = _RESOURCE_ATTRS[signal]
     keys = (*_head(signal), *group)
@@ -858,20 +883,27 @@ def _encoder(
         (scope_key, f"array({scope})"),
     ) + ")"))
     return _Encoder(
-        keys,
-        (
-            *keys,
-            f"{item} AS _item",
-            f"pmod(xxhash64({bucket_of}), {ENCODE_BUCKETS}) AS _bucket",
-        ),
+        (*keys, "_bucket"),
+        (*keys, f"{item} AS _item", f"{bucket} AS _bucket"),
         f"to_json({request}) AS {_q(PAYLOAD_COL)}",
     )
 
 
 def _encode(df: DataFrame, enc: _Encoder) -> DataFrame:
+    """``enc`` over ``df``. The rows are hash-partitioned on the request
+    keys into a fixed number of reducers, at least one per core: AQE
+    leaves such an exchange as it is (it would merge a small encode's
+    shuffle into one reducer), and the aggregate reuses its partitioning,
+    so the encode keeps one ``Exchange``."""
+    spark = df.sparkSession
+    reducers = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
     return (
         df.selectExpr(*enc.rows)
-        .groupBy(*enc.keys, "_bucket")
+        .repartition(reducers, *enc.keys)
+        .groupBy(*enc.keys)
         .agg(F.collect_list("_item").alias("_items"))
         .selectExpr(enc.request)
     )
@@ -895,7 +927,7 @@ _LOGS_ENCODE = _encoder(
         ("droppedAttributesCount",
          "CASE WHEN dropped_attributes_count > 0 THEN dropped_attributes_count END"),
     ),
-    "time_unix_nano",
+    _BATCH_BUCKET,
 )
 
 
@@ -904,9 +936,10 @@ def encode_otlp_json(df: DataFrame) -> DataFrame:
     ExportLogsServiceRequest payloads — the exporter half of the protocol
     (go/pkg/otel/logs/otlp/logs.go is the reference's columnar→OTLP
     inverse; this is the same re-nesting with Catalyst building the
-    batches). One request per (resource attributes, scope, bucket): rows
-    sharing a resource+scope re-batch together, the bucket (a stable hash
-    of the timestamp) bounding request size.
+    batches). Rows sharing a resource+scope re-batch together, into
+    requests of at most ``ENCODE_BATCH_ITEMS`` records: one request per
+    (resource attributes, scope, run of ``ENCODE_BATCH_ITEMS``
+    consecutive rows of one input partition).
 
     Proto3 JSON fidelity: int64s re-serialize as strings (`timeUnixNano`
     stays the string form of the BIGINT), AnyValue branches are rebuilt
@@ -941,7 +974,8 @@ _TRACES_ENCODE = _encoder(
             ("message", "status_message"),
         )),
     ),
-    "trace_id",
+    # for coherence, not size: a trace's spans share one bucket
+    f"pmod(xxhash64(trace_id), {ENCODE_BUCKETS})",
 )
 
 
@@ -951,8 +985,10 @@ def encode_otlp_traces_json(df: DataFrame) -> DataFrame:
     :func:`encode_otlp_json` (go/pkg/otel/traces/otlp is the reference's
     inverse direction). Batching: one request per (resource, scope,
     trace-id hash bucket) — spans of one trace always land in ONE request
-    (trace-coherent batching, what a tail-sampling exporter needs), with
-    the bucket bounding request size. Same single batching shuffle.
+    (trace-coherent batching, what a tail-sampling exporter needs). The
+    ``ENCODE_BUCKETS`` buckets split a (resource, scope) group for that
+    coherence; they do not bound request size. Same single batching
+    shuffle.
 
     Proto3 fidelity: NULL fields are omitted from the wire, so a root
     span has no parentSpanId. Status is re-nested as ``{"code", "message"}``
@@ -991,7 +1027,7 @@ _METRICS_ENCODE = _encoder(
             _kv(_lit("point.seq"), int="CAST(point_seq AS STRING)"),
         ]) + ")"),
     ),
-    "time_unix_nano",
+    _BATCH_BUCKET,
     group=("metric_name", "metric_unit", "metric_type", "temporality", "is_monotonic"),
     items="array(" + _named_struct(
         ("name", "metric_name"),
@@ -1007,8 +1043,10 @@ def encode_otlp_metrics_json(df: DataFrame) -> DataFrame:
     five Metric oneof branches — completing the bidirectional OTLP
     surface for the third signal (go/pkg/otel/metrics is the reference's
     inverse direction). One request per (resource, scope, metric,
-    branch metadata, time-hash bucket); the branch struct is rebuilt
-    conditionally and ``to_json`` drops the four absent oneof fields.
+    branch metadata, run of ``ENCODE_BATCH_ITEMS`` consecutive rows of
+    one input partition), so at most ``ENCODE_BATCH_ITEMS`` points; the
+    branch struct is rebuilt conditionally and ``to_json`` drops the
+    four absent oneof fields.
 
     Number points re-serialize as ``asDouble`` regardless of the
     original wire branch: the parse coalesces asInt/asDouble into one

@@ -825,10 +825,20 @@ def connected_components(
     # partitioning-invariant by construction). Large graphs keep the
     # session config. Conf is restored afterwards; the loop's outputs
     # are checkpointed inside it, so nothing lazy escapes the override.
-    if edges.count() <= 1_000_000:
-        with small_state_conf(edges.sparkSession):
-            return _cc_loop(edges, max_iter)
-    return _cc_loop(edges, max_iter)
+    try:
+        if edges.count() <= 1_000_000:
+            with small_state_conf(edges.sparkSession):
+                return _cc_loop(edges, max_iter)
+        return _cc_loop(edges, max_iter)
+    finally:
+        _release(edges)
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``ed frame, which stay
+    registered with the SparkContext for the session's life otherwise.
+    Nothing may read the frame afterwards."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -858,14 +868,21 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
     # the common fast-converging template-family graphs total work is the
     # minimum diameter+1 propagations (batching two steps per check was
     # measured 1.7x slower here: it always pays 2x propagations per check)
+    # each round's labels are released once the next round's are
+    # checkpointed; the last round's are the result
     converged = False
+    new = None
     for _ in range(max_iter):
-        new = propagate(labels).localCheckpoint()
+        prev, new = new, propagate(labels).localCheckpoint()
+        if prev is not None:
+            _release(prev)
         converged = new.where(F.col("comp") < F.col("old")).isEmpty()
         labels = new.select("id", "comp")
         if converged:
             break
     if not converged:
+        if new is not None:
+            _release(new)
         # returning silently-partial labels would let duplicates survive
         # dedup_cluster_representatives as fake "representatives"
         raise RuntimeError(

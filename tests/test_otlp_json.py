@@ -437,3 +437,92 @@ class TestDecodePlan:
         plan = decoded._jdf.queryExecution().executedPlan().toString()
         assert plan.count("filter(") == 3
         assert plan.index(" AS service_name") > plan.index("Generate explode(_scope")
+
+
+def _ddl_columns(ddl: str, **exprs: str) -> list[str]:
+    """A ``selectExpr`` list of ``ddl``'s columns in order: ``exprs[name]``
+    where given, else a typed NULL."""
+    cols = []
+    for field in ddl.split(", "):
+        name, dtype = field.split(" ", 1)
+        cols.append(f"{exprs.get(name, f'CAST(NULL AS {dtype})')} AS {name}")
+    return cols
+
+
+def _sorted_maps(df):
+    """``df`` with map columns as key-sorted entry arrays, which
+    ``exceptAll`` can compare."""
+    from pyspark.sql import functions as F
+
+    return df.select(*[
+        F.array_sort(F.map_entries(f.name)).alias(f.name)
+        if isinstance(f.dataType, T.MapType) else F.col(f.name)
+        for f in df.schema.fields
+    ])
+
+
+_ONE_GROUP = {
+    "logs": (
+        _LOG_DDL,
+        dict(
+            service_name="'svc'", environment="'prod'", scope_name="'app'",
+            scope_version="'1.0.0'", time_unix_nano="1767225600000000000 + id",
+            severity_number="9", severity_text="'INFO'", body="concat('m', id)",
+            dropped_attributes_count="0", event_index="id",
+            attributes="map('event.index', CAST(id AS STRING))",
+        ),
+        lambda req: req["resourceLogs"][0]["scopeLogs"][0]["logRecords"],
+    ),
+    "metrics": (
+        _METRIC_DDL,
+        dict(
+            service_name="'svc'", scope_name="'app'", scope_version="'1.0.0'",
+            metric_name="'m.gauge'", metric_unit="'By'", metric_type="'gauge'",
+            time_unix_nano="id", value="CAST(id AS DOUBLE)",
+            host_name="'host-01'", point_seq="id",
+        ),
+        lambda req: (
+            req["resourceMetrics"][0]["scopeMetrics"][0]["metrics"][0]["gauge"]["dataPoints"]
+        ),
+    ),
+}
+
+
+class TestEncodeBatching:
+    @pytest.mark.parametrize("signal", list(_ONE_GROUP))
+    def test_requests_hold_at_most_batch_items(self, spark, signal):
+        """20,000 rows of one (resource, scope[, metric]) group in one
+        partition become three requests of at most ENCODE_BATCH_ITEMS
+        items each, whatever the group's size, and decode back to the
+        same rows."""
+        ddl, exprs, items = _ONE_GROUP[signal]
+        flat = spark.range(0, 20_000, 1, numPartitions=1).selectExpr(
+            *_ddl_columns(ddl, **exprs)
+        )
+        payloads = _ENCODERS[signal](flat).collect()
+        sizes = sorted(len(items(json.loads(r.payload))) for r in payloads)
+        assert sizes == [20_000 - 2 * 8192, 8192, 8192]
+        decoded = _DECODERS[signal][1](spark.createDataFrame(payloads))
+        got, want = _sorted_maps(decoded), _sorted_maps(flat)
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+    @pytest.mark.parametrize("signal", ["logs", "traces", "metrics"])
+    def test_reduce_stage_uses_every_core(self, spark, signal):
+        """The encode's one exchange keeps its reducer count,
+        max(defaultParallelism, shuffle partitions), in the final AQE
+        plan: AQE does not coalesce it into one reducer."""
+        import re
+
+        encoded = _ENCODERS[signal](_DECODERS[signal][1](_payloads(spark, signal)))
+        encoded.collect()
+        adaptive = encoded._jdf.queryExecution().executedPlan()
+        assert adaptive.isFinalPlan()
+        plan = adaptive.executedPlan().toString()
+        reducers = max(
+            spark.sparkContext.defaultParallelism,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
+        assert re.findall(r"Exchange hashpartitioning\(.*, (\d+)\),", plan) == [
+            str(reducers)
+        ]
+        assert "AQEShuffleRead" not in plan

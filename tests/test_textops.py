@@ -435,6 +435,22 @@ class TestConnectedComponents:
         want = {v: find(v) for v in {x for e in edges for x in e}}
         assert got == want
 
+    def test_releases_its_checkpoints(self, spark):
+        """The edge list and every round's labels but the returned ones
+        are released: a call leaves at most one persistent RDD."""
+        from otel_arrow_spark.textops.dedup import connected_components
+
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(6)] + [(20, 21)], "id_a long, id_b long"
+        )
+        labels = connected_components(pairs)
+        assert {r.id: r.comp for r in labels.collect()} == {
+            **{i: 0 for i in range(7)}, 20: 20, 21: 20
+        }
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
+
     def test_representatives(self, spark):
         from otel_arrow_spark.textops.dedup import dedup_cluster_representatives
 

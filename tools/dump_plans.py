@@ -333,8 +333,9 @@ def main() -> None:
         (
             "OTLP/JSON logs encode (exporter re-batching)",
             "Expected: exactly one `Exchange` (the exporter's batching "
-            "shuffle on resource+scope+bucket), `collect_list` in a "
-            "partial+final ObjectHashAggregate, `to_json` in the final "
+            "shuffle on resource+scope+bucket, `REPARTITION_BY_NUM` to "
+            "one reducer per core), `collect_list` in a partial+final "
+            "ObjectHashAggregate after it, `to_json` in the final "
             "Project, zero Python.",
             encode_otlp_json(parse_otlp_json(payloads)),
         )
